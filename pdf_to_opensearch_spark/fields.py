@@ -9,8 +9,8 @@ this module reproduces exactly that shape: every extra analyzed field
 gets its own posting space under ``<root>/fields/<name>/`` built from
 the SAME docs table (same doc_ids, same prepare-assigned ranges), so
 
-- the build stays ZERO-shuffle (the field projection is written one file
-  per range under the no-split read conf, preserving range alignment);
+- the build stays ZERO-shuffle (the field projection writes one file
+  per docs file, preserving range alignment);
 - per-field (df, avgdl, per-doc dl) fall out by construction — each
   posting space carries its own dictionary and stats tables;
 - the query path is the UNCHANGED block-max BM25 engine pointed at the
@@ -31,13 +31,15 @@ all-fields-consistent delete (opensearch_loader.py:410-451).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .indexer import (
     IndexPaths,
     build_postings,
+    list_dir,
+    list_parquet_files,
+    qualify,
     read_small_table,
-    write_small_table,
+    write_docs_meta,
 )
 
 
@@ -49,27 +51,11 @@ def list_field_roots(spark: SparkSession, index_dir: str) -> list[str]:
     """Names of the field posting spaces present under ``<root>/fields/``
     (empty when the index has no extra analyzed fields). Used by
     maintenance to carry field spaces through snapshots."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/fields")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    return sorted(st.getPath().getName() for st in fs.listStatus(p)
-                  if st.isDirectory())
+    import pyarrow.fs as pafs
 
-
-def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
-    """Data files of one parquet directory via the Hadoop FileSystem API
-    (scheme-agnostic: local, HDFS, object stores)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith(("_", ".")):
-            out.append(st.getPath().toString())
-    return sorted(out)
+    _fs, entries = list_dir(spark, f"{index_dir}/fields")
+    return [e.base_name for e in entries
+            if e.type == pafs.FileType.Directory]
 
 
 def _project_field_files(field: str):
@@ -77,29 +63,23 @@ def _project_field_files(field: str):
     docs parquet file(s) directly (pyarrow) and emits the projected field
     docs — one output file per source file, so the docs-file ↔ doc-range
     alignment that makes the posting build shuffle-free is preserved by
-    construction, with NO session-conf involvement (the previous
-    implementation toggled the global no-split read conf, which raced
-    with any concurrent read in the same session)."""
+    construction, with NO session-conf involvement (toggling the global
+    no-split read conf raced with any concurrent read in the same
+    session)."""
     import pandas as pd
 
     def project(it):
+        import pyarrow.fs as pafs
         import pyarrow.parquet as pq
 
         from .analyzer import tokenize_arrow_batch
 
         for pdf in it:
             for uri in pdf["path"]:
-                if uri.startswith("file:"):
-                    tbl = pq.read_table(
-                        uri[5:], columns=["doc_id", field, "range_id"])
-                else:
-                    import pyarrow.fs as pafs
-
-                    fsys, rel = pafs.FileSystem.from_uri(uri)
-                    tbl = pq.read_table(
-                        rel, filesystem=fsys,
-                        columns=["doc_id", field, "range_id"])
-                sub = tbl.to_pandas()
+                fsys, rel = pafs.FileSystem.from_uri(uri)
+                sub = pq.read_table(
+                    rel, filesystem=fsys,
+                    columns=["doc_id", field, "range_id"]).to_pandas()
                 # NULL field values analyze as empty documents (dl 0),
                 # matching an absent optional field
                 text = sub[field].fillna("").astype(str)
@@ -125,8 +105,6 @@ def build_field_index(spark: SparkSession, index_dir: str, field: str,
     as empty documents (dl 0), matching an absent optional field.
     Returns the field root path.
     """
-    import pandas as pd
-
     paths = IndexPaths(index_dir)
     froot = field_root(index_dir, field)
     fpaths = IndexPaths(froot)
@@ -137,16 +115,18 @@ def build_field_index(spark: SparkSession, index_dir: str, field: str,
         n_buckets = int(st["n_buckets"])
 
     # zero-shuffle field projection via an EXPLICIT per-file read (the
-    # round-5 fix for the session-global no-split conf toggle, which
-    # raced with concurrent reads in the same session): one task per
-    # docs file reads it directly and writes the projected field docs in
-    # the same layout — range alignment is preserved by construction, so
+    # fix for a session-global no-split conf toggle, which raced with
+    # concurrent reads in the same session): one task per docs file
+    # reads it directly and writes the projected field docs in the same
+    # layout — range alignment is preserved by construction, so
     # build_postings over the field space needs no repartition either
     if field not in spark.read.parquet(paths.docs).schema.names:
         raise ValueError(
             f"field {field!r} is not a column of the docs table "
             f"(have: {spark.read.parquet(paths.docs).schema.names})")
-    files = _list_parquet_files(spark, paths.docs)
+    docs_uri = qualify(spark, paths.docs)
+    files = [f"{docs_uri}/{i.base_name}"
+             for i in list_parquet_files(spark, paths.docs)[1]]
     file_rows = spark.sparkContext.parallelize(
         [(p,) for p in files], max(len(files), 1))
     fl = spark.createDataFrame(file_rows, "path string")
@@ -158,13 +138,7 @@ def build_field_index(spark: SparkSession, index_dir: str, field: str,
     # per-field corpus statistics: same N, field-specific avgdl (Lucene
     # norms are per field — a short 'previous' context must not be scored
     # with the current field's average length)
-    g = (spark.read.parquet(fpaths.docs)
-         .agg(F.count("*").alias("N"), F.sum("dl").alias("sum_dl"))
-         .collect()[0])
-    n_docs, sum_dl = int(g["N"]), int(g["sum_dl"] or 0)
-    meta = pd.DataFrame([{"N": n_docs, "sum_dl": sum_dl,
-                          "avgdl": (sum_dl / n_docs) if n_docs else 0.0}])
-    write_small_table(spark, meta, fpaths.docs_meta)
+    write_docs_meta(spark, fpaths)
 
     build_postings(spark, froot, num_ranges=num_ranges, n_buckets=n_buckets)
     return froot

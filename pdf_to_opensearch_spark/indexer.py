@@ -22,10 +22,9 @@ inverted index:
    wide operations are the range repartition (by doc_id, balanced, never
    skewed regardless of Zipfian term skew) and the tiny dictionary
    aggregate (map-side combined sum — associative, skew-immune).
-4. **Term-bucket write partitioning** — postings written
-   ``partitionBy(bucket = crc32(term) % n_buckets)`` so query-time term
-   lookups prune partitions, plus parquet min/max row-group stats on
-   ``term`` within each bucket file.
+4. **Term-bucket ordering** — each postings file is sorted by
+   ``(bucket = crc32(term) % n_buckets, term)``, so query-time term
+   lookups prune row groups on parquet min/max stats.
 5. **Manifest + lineage** per range (the archive-sink analogue,
    opensearch_loader.py:608-702): docs, terms, bytes, wall-clock,
    analyzer version, commit timestamp.
@@ -33,6 +32,7 @@ inverted index:
 
 from __future__ import annotations
 
+import functools
 import time
 import zlib
 from collections.abc import Iterator
@@ -46,13 +46,6 @@ from . import ANALYZER_VERSION, BM25_B, BM25_K1
 from .analyzer import tokenize_arrow_batch
 from .codec import encode_postings_batch
 
-POSTINGS_SCHEMA = (
-    "term string, range_id int, first_doc_id long, n long, cf long, "
-    "doc_ids binary, tfs binary, dls binary, poss binary, "
-    "block_max_tf binary, block_min_dl binary, max_tf long, "
-    "n_bytes long, wall_ms long"
-)
-
 DEFAULT_BUCKETS = 16
 
 # derived-tables epilogue fast path: at or below this many DOCS the fused
@@ -64,13 +57,20 @@ DEFAULT_BUCKETS = 16
 SMALL_DERIVED_DOCS_MAX = 200_000
 
 
-def term_bucket_col(term_col, n_buckets: int = DEFAULT_BUCKETS):
-    """Deterministic term → bucket (crc32 mod n). Matches _bucket_of."""
-    return F.pmod(F.crc32(term_col.cast("string")), F.lit(n_buckets)).cast("int")
-
-
 def bucket_of(term: str, n_buckets: int = DEFAULT_BUCKETS) -> int:
     return zlib.crc32(term.encode("utf-8")) % n_buckets
+
+
+def _partition_offsets(ranged: DataFrame) -> tuple[dict[int, int], int]:
+    """First doc_id of every ``_pid`` partition (one tiny count job),
+    and the total row count."""
+    counts = {r["_pid"]: r["cnt"] for r in
+              ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
+    offsets, acc = {}, 0
+    for pid in sorted(counts):
+        offsets[pid] = acc
+        acc += counts[pid]
+    return offsets, acc
 
 
 def assign_doc_ids(docs_df: DataFrame, partitions: int = 32,
@@ -94,15 +94,7 @@ def assign_doc_ids(docs_df: DataFrame, partitions: int = 32,
               .sortWithinPartitions("url")
               .withColumn("_pid", F.spark_partition_id()))
     ranged = ranged.persist()
-    counts = dict(
-        (r["_pid"], r["cnt"])
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    offsets, _n = _partition_offsets(ranged)
 
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in docs_df.schema.fields
@@ -157,7 +149,6 @@ def _spimi_batches():
                           rng[tk["doc_idx"]]))
             dicts.append(tk["uniq"])
         if not parts:
-            yield _empty_postings_frame()
             return
         all_uniq = np.concatenate(dicts)
         gcodes_of_dict, uniq_terms = pd.factorize(all_uniq, sort=False)
@@ -234,78 +225,110 @@ def _spimi_batches():
     return spimi
 
 
-def _empty_postings_frame() -> pd.DataFrame:
-    return pd.DataFrame({
-        "term": pd.Series(dtype="string"),
-        "range_id": pd.Series(dtype="int32"),
-        "first_doc_id": pd.Series(dtype="int64"),
-        "n": pd.Series(dtype="int64"),
-        "cf": pd.Series(dtype="int64"),
-        "doc_ids": pd.Series(dtype=object),
-        "tfs": pd.Series(dtype=object),
-        "dls": pd.Series(dtype=object),
-        "poss": pd.Series(dtype=object),
-        "block_max_tf": pd.Series(dtype=object),
-        "block_min_dl": pd.Series(dtype=object),
-        "max_tf": pd.Series(dtype="int64"),
-        "n_bytes": pd.Series(dtype="int64"),
-        "wall_ms": pd.Series(dtype="int64"),
-    })
+def qualify(spark: SparkSession, path: str) -> str:
+    """``path`` as a URI, qualified by Hadoop exactly as Spark's own
+    readers and writers qualify it.
+
+    A scheme-less path is NOT inherently local: Hadoop resolves it
+    against ``fs.defaultFS`` (e.g. HDFS on a real cluster) and a
+    relative one against that filesystem's working directory, so every
+    pyarrow read or write of an index table goes through this one
+    resolver and ``pyarrow.fs.FileSystem.from_uri`` on its result. The
+    URI is percent-escaped; pass it to pyarrow, not back in here.
+    Memoized per SparkContext: one resolution costs ~10 py4j round
+    trips (~10 ms on a 4-CPU box), and every query asks for its tables.
+    """
+    return _qualify(spark.sparkContext, path)
 
 
-def _is_local_path(path: str, spark: SparkSession | None = None) -> bool:
-    """True iff the driver-local pyarrow fast path is safe for ``path``.
+@functools.lru_cache(maxsize=4096)
+def _qualify(sc, path: str) -> str:
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    return str(fs.makeQualified(p).toUri().toString())
 
-    A scheme-less path is NOT inherently local: Spark executors resolve it
-    against ``fs.defaultFS`` (e.g. HDFS on a real cluster), so the fast
-    path would silently write the driver's disk while the cluster reads
-    elsewhere. Only take it when the cluster default FS is the local FS."""
-    if path.startswith("file://"):
-        return True
-    if "://" in path:
-        return False
-    if spark is not None:
-        default_fs = (spark.sparkContext._jsc.hadoopConfiguration()
-                      .get("fs.defaultFS", "file:///"))
-        return default_fs.startswith("file:")
-    return True
+
+def is_local(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` resolves to the local filesystem."""
+    return qualify(spark, path).startswith("file:")
+
+
+def _open_fs(spark: SparkSession, path: str):
+    """(pyarrow filesystem, filesystem path) for an index path."""
+    import pyarrow.fs as pafs
+
+    return pafs.FileSystem.from_uri(qualify(spark, path))
+
+
+def _rm_dir(fs, path: str) -> None:
+    import pyarrow.fs as pafs
+
+    if fs.get_file_info(path).type != pafs.FileType.NotFound:
+        fs.delete_dir(path)
+
+
+def list_dir(spark: SparkSession, path: str):
+    """(filesystem, entries) of one directory, hidden (``_``/``.``)
+    entries excluded — the names Spark's parquet reader would see. A
+    missing directory lists as empty."""
+    import pyarrow.fs as pafs
+
+    fs, p = _open_fs(spark, path)
+    infos = fs.get_file_info(pafs.FileSelector(p, allow_not_found=True))
+    return fs, sorted((i for i in infos
+                       if not i.base_name.startswith(("_", "."))),
+                      key=lambda i: i.base_name)
+
+
+def list_parquet_files(spark: SparkSession, path: str):
+    """(filesystem, data-file infos) of one parquet directory."""
+    import pyarrow.fs as pafs
+
+    fs, infos = list_dir(spark, path)
+    return fs, [i for i in infos if i.type == pafs.FileType.File]
 
 
 def write_small_table(spark: SparkSession, pdf: pd.DataFrame,
                       path: str) -> None:
     """Overwrite a tiny driver-side table (stats, docs_meta — one to a
-    few rows). On a local FS this is a direct pyarrow write: a full
-    Spark job for a 1-row parquet is pure scheduling overhead (~0.3 s)
-    that shows up as SERIAL epilogue in the build's scaling profile. On
-    an object store it falls back to the Spark writer (at real scale
-    these writes are catalog commits anyway)."""
-    if _is_local_path(path, spark):
-        import os
-        import shutil
+    few rows) with a direct pyarrow write: a full Spark job for a 1-row
+    parquet is pure scheduling overhead (~0.3 s) that shows up as SERIAL
+    epilogue in the build's scaling profile. The file is written to a
+    staging directory first and then moved on its own: object stores
+    (S3) move files, not directories."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        p = path[7:] if path.startswith("file://") else path
-        staging = p + ".staging_small"
-        shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(staging)
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                       os.path.join(staging, "part-00000.parquet"))
-        shutil.rmtree(p, ignore_errors=True)
-        os.rename(staging, p)
-    else:
-        (spark.createDataFrame(pdf).coalesce(1)
-         .write.mode("overwrite").parquet(path))
+    fs, p = _open_fs(spark, path)
+    staging = p + ".staging_small"
+    part = "part-00000.parquet"
+    _rm_dir(fs, staging)
+    fs.create_dir(staging)
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                   f"{staging}/{part}", filesystem=fs)
+    _rm_dir(fs, p)
+    fs.create_dir(p)
+    fs.move(f"{staging}/{part}", f"{p}/{part}")
+    fs.delete_dir(staging)
 
 
 def read_small_table(spark: SparkSession, path: str) -> pd.DataFrame:
-    """Driver-side read of a tiny table (pandas/pyarrow on a local FS —
-    no Spark job; Spark reader otherwise)."""
-    if _is_local_path(path, spark):
-        p = path[7:] if path.startswith("file://") else path
-        return pd.read_parquet(p)
-    return spark.read.parquet(path).toPandas()
+    """Driver-side read of a tiny table (pyarrow — no Spark job)."""
+    fs, p = _open_fs(spark, path)
+    return pd.read_parquet(p, filesystem=fs)
+
+
+def file_aligned_session(spark: SparkSession) -> SparkSession:
+    """A child session whose parquet reads give ONE partition per file:
+    no file is split by row group and no two files are packed together.
+    A table rewritten through it keeps every range whole in one file,
+    as :func:`write_postings` requires, whatever the file sizes. The
+    conf lives in the child, so the caller's session, and any read
+    running concurrently in it, keeps its own."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
+    s.conf.set("spark.sql.files.openCostInBytes", str(1 << 40))
+    return s
 
 
 class IndexPaths:
@@ -332,16 +355,15 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
     FUSED write (guide §4.1/§2.4): the id-assign ``mapInPandas`` computes
     ``dl`` itself (one Arrow tokenize per batch) instead of a second
     ``token_count_udf`` ArrowEvalPython node — the text column crosses
-    the JVM↔Python boundary ONCE, not twice. On a local FS with a
-    driver-sized corpus each task additionally side-writes its
-    partition's ``doc_stats`` (doc_id, dl) file with pyarrow
-    (deterministic per-partition names — retries overwrite idempotently,
-    the :func:`_spimi_python_io` pattern) and the N/sum_dl meta comes
-    from one driver-side pandas read — the separate doc_stats-write and
-    aggregate Spark jobs disappear (3 jobs instead of 5 per build).
-    Non-local targets / web-scale corpora keep the distributed writes."""
-    import os
-    import shutil
+    the JVM↔Python boundary ONCE, not twice. With a driver-sized
+    corpus each task additionally side-writes its partition's
+    ``doc_stats`` (doc_id, dl) file with pyarrow (deterministic
+    per-partition names — retries overwrite idempotently, the
+    :func:`write_postings` pattern) and the N/sum_dl meta comes from one
+    driver-side read — the separate doc_stats-write and aggregate Spark
+    jobs disappear (3 jobs instead of 5 per build). Web-scale corpora
+    keep the distributed writes."""
+    import pyarrow.fs as pafs
 
     paths = IndexPaths(out_dir)
     ranged = (docs_df
@@ -350,23 +372,13 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
               .withColumn("_pid", F.spark_partition_id()))
     ranged = ranged.persist()
     try:
-        counts = dict(
-            (r["_pid"], r["cnt"])
-            for r in ranged.groupBy("_pid").agg(
-                F.count("*").alias("cnt")).collect()
-        )
-        offsets = {}
-        acc = 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        N = acc
-        local_stats = (_is_local_path(paths.doc_stats, spark)
-                       and N <= SMALL_DERIVED_DOCS_MAX)
-        stats_dir = paths.doc_stats
+        offsets, N = _partition_offsets(ranged)
+        local_stats = N <= SMALL_DERIVED_DOCS_MAX
+        stats_uri = qualify(spark, paths.doc_stats)
         if local_stats:
-            shutil.rmtree(stats_dir, ignore_errors=True)
-            os.makedirs(stats_dir, exist_ok=True)
+            fs, stats_dir = pafs.FileSystem.from_uri(stats_uri)
+            _rm_dir(fs, stats_dir)
+            fs.create_dir(stats_dir)
 
         out_schema = ", ".join(
             f"{f.name} {f.dataType.simpleString()}"
@@ -375,6 +387,7 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
 
         def add_ids(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import pyarrow as pa
+            import pyarrow.fs as pafs
             import pyarrow.parquet as pq
 
             pa.set_cpu_count(1)
@@ -402,9 +415,10 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
                 yield out
             if local_stats and stat_chunks:
                 st = pd.concat(stat_chunks, ignore_index=True)
+                sfs, sdir = pafs.FileSystem.from_uri(stats_uri)
                 pq.write_table(
                     pa.Table.from_pandas(st, preserve_index=False),
-                    os.path.join(stats_dir, f"part-r{pid:05d}.parquet"))
+                    f"{sdir}/part-r{pid:05d}.parquet", filesystem=sfs)
 
         # one file per id-partition → each docs file holds exactly one doc
         # range; build_postings exploits this to run with ZERO shuffle
@@ -417,60 +431,132 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
     # docs-derived tables belong to phase A: they never change during the
     # indexing job, so the job itself doesn't pay for them (and doesn't
     # rescan docs for N/avgdl — docs_meta is a one-row point read)
-    if local_stats:
-        try:
-            st = pd.read_parquet(stats_dir, columns=["dl"])
-            sum_dl = int(st["dl"].sum())
-        except Exception:  # empty corpus: no side-written files
-            write_small_table(spark, pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "dl": pd.Series(dtype="int32")}), stats_dir)
-            sum_dl = 0
-    else:
-        docs_tbl = spark.read.parquet(paths.docs)
-        (docs_tbl.select("doc_id", "dl")
+    if not local_stats:
+        (spark.read.parquet(paths.docs).select("doc_id", "dl")
          .write.mode("overwrite").parquet(paths.doc_stats))
-        g = docs_tbl.agg(F.sum("dl").alias("sum_dl")).collect()[0]
-        sum_dl = int(g["sum_dl"] or 0)
+        write_docs_meta(spark, paths)
+        return paths
+    try:
+        st = pd.read_parquet(stats_dir, columns=["dl"], filesystem=fs)
+        sum_dl = int(st["dl"].sum())
+    except Exception:  # empty corpus: no side-written files
+        write_small_table(spark, pd.DataFrame(
+            {"doc_id": pd.Series(dtype="int64"),
+             "dl": pd.Series(dtype="int32")}), paths.doc_stats)
+        sum_dl = 0
     meta = pd.DataFrame([{"N": N, "sum_dl": sum_dl,
                           "avgdl": (sum_dl / N) if N else 0.0}])
     write_small_table(spark, meta, paths.docs_meta)
     return paths
 
 
-_POSTINGS_ARROW_SCHEMA = None
-
-
+@functools.cache
 def _postings_arrow_schema():
-    """pyarrow schema EXACTLY matching the JVM writer's parquet footer
-    (parquet column resolution is by name + type per file, so a pyio
-    file and a Spark-written file must agree field-for-field)."""
-    global _POSTINGS_ARROW_SCHEMA
-    if _POSTINGS_ARROW_SCHEMA is None:
-        import pyarrow as pa
+    """pyarrow schema of every postings file (parquet column resolution
+    is by name + type per file, so all files must agree field-for-field
+    with the footers of indexes already on disk)."""
+    import pyarrow as pa
 
-        _POSTINGS_ARROW_SCHEMA = pa.schema([
-            ("term", pa.string()), ("range_id", pa.int32()),
-            ("first_doc_id", pa.int64()), ("n", pa.int64()),
-            ("cf", pa.int64()), ("doc_ids", pa.binary()),
-            ("tfs", pa.binary()), ("dls", pa.binary()),
-            ("poss", pa.binary()), ("block_max_tf", pa.binary()),
-            ("block_min_dl", pa.binary()), ("max_tf", pa.int64()),
-            ("n_bytes", pa.int64()), ("wall_ms", pa.int64()),
-            ("bucket", pa.int32()),
-        ])
-    return _POSTINGS_ARROW_SCHEMA
+    return pa.schema([
+        ("term", pa.string()), ("range_id", pa.int32()),
+        ("first_doc_id", pa.int64()), ("n", pa.int64()),
+        ("cf", pa.int64()), ("doc_ids", pa.binary()),
+        ("tfs", pa.binary()), ("dls", pa.binary()),
+        ("poss", pa.binary()), ("block_max_tf", pa.binary()),
+        ("block_min_dl", pa.binary()), ("max_tf", pa.int64()),
+        ("n_bytes", pa.int64()), ("wall_ms", pa.int64()),
+        ("bucket", pa.int32()),
+    ])
 
 
-def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
-                     n_buckets: int, mode: str,
-                     completed_ranges: set[int] | None,
-                     collect_meta: bool = False):
-    """The SPIMI stage with PYTHON-NATIVE I/O: Spark schedules one task
-    per range-aligned docs FILE; the task reads its file with pyarrow,
-    runs the same :func:`_spimi_batches` kernel, and writes its postings
-    parquet directly with pyarrow — the document bytes never cross the
-    JVM↔Python Arrow socket in either direction.
+def _write_postings_file(tbl, fs, path: str) -> None:
+    """One postings parquet file. Dictionary encoding only where values
+    repeat: terms are unique per file and dls/poss payloads nearly so,
+    and dictionary pages for them cost ~6% of the file (the choice
+    Spark's writer makes by falling back to plain)."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(tbl, path, filesystem=fs, compression="snappy",
+                   use_dictionary=[c for c in tbl.column_names
+                                   if c not in ("term", "dls", "poss")])
+
+
+class LegacyLayoutError(ValueError):
+    """An index in a layout this engine no longer writes."""
+
+
+def require_current_layout(spark: SparkSession, paths: IndexPaths) -> None:
+    """Refuse the legacy layouts before a mutation writes anything: docs
+    without a stored ``range_id`` column, and postings under ``bucket=N/``
+    subdirectories. :func:`~.maintenance.reindex` reads either and
+    writes a current index."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    hint = (f"rebuild it with maintenance.reindex(spark, {paths.root!r}, "
+            "<new root>)")
+    fs, docs = list_parquet_files(spark, paths.docs)
+    if docs and "range_id" not in pq.read_schema(
+            docs[0].path, filesystem=fs).names:
+        raise LegacyLayoutError(
+            f"legacy index layout at {paths.root}: docs table has no "
+            f"range_id column; {hint}")
+    _fs, entries = list_dir(spark, paths.postings)
+    if any(e.type == pafs.FileType.Directory
+           and e.base_name.startswith("bucket=") for e in entries):
+        raise LegacyLayoutError(
+            f"legacy index layout at {paths.root}: postings are "
+            f"partitioned into bucket=N/ directories; {hint}")
+
+
+def lpt_bins(items, n_bins: int) -> list[list]:
+    """``items`` ((key, size) pairs) packed largest-first into ``n_bins``
+    bins of keys, each to the least-loaded bin (LPT, ≤4/3·OPT), the
+    fullest bin first."""
+    bins: list[list] = [[] for _ in range(n_bins)]
+    loads = [0] * n_bins
+    for key, size in sorted(items, key=lambda t: -t[1]):
+        i = loads.index(min(loads))
+        bins[i].append(key)
+        loads[i] += size
+    order = sorted(range(n_bins), key=lambda i: -loads[i])
+    return [bins[i] for i in order]
+
+
+def range_span(fs, path: str) -> tuple[int, int] | None:
+    """(min, max) ``range_id`` of one parquet file from its footer;
+    None for an empty file, (-inf, inf) when stats are missing."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path, filesystem=fs)
+    if md.num_rows == 0:
+        return None
+    col = md.schema.to_arrow_schema().names.index("range_id")
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(col).statistics
+        if st is None or not st.has_min_max:
+            return (-(1 << 62), 1 << 62)
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return (lo, hi)
+
+
+def write_postings(spark: SparkSession, docs_dir: str, postings_dir: str,
+                   n_buckets: int, *, mode: str = "overwrite",
+                   ranges: set[int] | None = None,
+                   skip: set[int] | None = None,
+                   carry_from: str | None = None,
+                   collect_meta: bool = False) -> pd.DataFrame | None:
+    """The one postings writer of build, resume, append, delete and
+    merge: builds the ranges in ``ranges`` (None = all) minus ``skip``.
+
+    Spark schedules LPT bins of files; each task reads its docs files
+    with pyarrow, runs the :func:`_spimi_batches` kernel and writes
+    postings with pyarrow, so document bytes never cross the JVM↔Python
+    Arrow socket (the boundary cost *Accelerating Python UDFs in
+    Vectorized Query Execution* isolates). All I/O goes through
+    ``pyarrow.fs`` on paths resolved by :func:`qualify`.
 
     Why: the measured single-machine envelope (BENCH.md §6, round-5
     diagnosis) shows the pure kernel scaling 1→4 cores at ~0.86 — like
@@ -479,64 +565,95 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
     ~0.62: the boundary crossings double memory traffic and hit the
     shared-bandwidth wall first. Removing them makes the Spark stage the
     pool control plus a scheduler. At cluster scale the same holds per
-    executor (Arrow IPC is intra-node but still 2× the bytes); pyarrow
-    reads object storage through fsspec the same way.
+    executor (Arrow IPC is intra-node but still 2× the bytes).
 
-    Contract parity with the JVM writer: identical columns and types
-    (:func:`_postings_arrow_schema`), rows sorted by (bucket, term)
-    within each file (row-group pruning), deterministic per-file names
-    (task retries overwrite idempotently — the manifest remains the
-    commit record, exactly as before). ``overwrite`` cleans the dir
-    driver-side first; ``append`` (resume/streaming) writes only
-    not-yet-committed ranges under names that cannot collide with
-    existing files.
+    Docs files are picked from their footer ``range_id`` stats. Each
+    built range must sit whole in ONE docs file (its postings rows are
+    emitted once); a range spread over two files raises.
 
-    Returns False when the layout doesn't allow it (no local
-    range-aligned docs files) — the caller falls back to the JVM path.
+    ``carry_from`` is a postings directory whose rows of the OTHER
+    ranges carry over: a file holding none of the built ranges is
+    copied (left alone when it is ``postings_dir`` itself — resume),
+    any other file is rewritten without those ranges' rows. Snapshots
+    carry from their source index; resume carries in place, which also
+    drops rows a crashed build wrote before its manifest commit.
 
-    ``collect_meta=True`` (small-index builds only): each task also
-    YIELDS the two derived-tables grouping-set partials it can compute
-    locally — the manifest row of every range it wrote (complete: a
-    range never spans files) and its per-term (df, cf) partial sums —
-    and the function returns the collected partials DataFrame instead
-    of True. :func:`refresh_derived_tables` then finishes the
-    dictionary/manifest with a pandas groupby, so the whole build is
-    ONE Spark job: the epilogue's separate scan+aggregate job (the
-    serial Amdahl term of whole-job scaling) disappears. The collect
-    is bounded by Σ per-file vocabulary, which the
-    SMALL_DERIVED_DOCS_MAX guard keeps driver-sized; web-scale builds
-    keep the distributed epilogue.
+    Each built range gets one file, ``part-pyio-r<r>-<r>``; a rewritten
+    carry file is named by its remaining ranges plus the crc32 of its
+    source name. Names are deterministic, so a retried task overwrites
+    its own files. ``overwrite`` clears ``postings_dir`` first.
+
+    ``collect_meta=True`` (small full builds): each task also writes
+    the two derived-tables grouping-set partials of what it built — the
+    manifest row of every range (complete: a range never spans files)
+    and per-term (df, cf) partial sums — under ``_partials/`` and the
+    collected partials are returned for :func:`refresh_derived_tables`
+    to finish with a pandas groupby, so the build is ONE Spark job: the
+    epilogue's separate scan+aggregate job (the serial Amdahl term of
+    whole-job scaling) disappears. The partials are bounded by Σ
+    per-file vocabulary, which the SMALL_DERIVED_DOCS_MAX guard keeps
+    driver-sized; web-scale builds keep the distributed epilogue.
     """
-    import glob as _glob
-    import os
-    import shutil
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
 
-    if not _is_local_path(paths.docs, spark):
-        return False
-    files = sorted(_glob.glob(os.path.join(paths.docs, "*.parquet")))
-    if not files:
-        return False
-    if mode == "overwrite":
-        shutil.rmtree(paths.postings, ignore_errors=True)
-    os.makedirs(paths.postings, exist_ok=True)
-    post_dir = paths.postings
+    docs_uri = qualify(spark, docs_dir)
+    post_uri = qualify(spark, postings_dir)
+    carry_uri = qualify(spark, carry_from) if carry_from else None
+    in_place = carry_uri == post_uri
+    pfs, post = pafs.FileSystem.from_uri(post_uri)
+    if mode == "overwrite" and not in_place:
+        _rm_dir(pfs, post)
+    pfs.create_dir(post)
     # derived-table partials return via SIDE FILES under _partials/ (a
     # "_"-prefixed dir is invisible to both the Spark reader and the
-    # pyio globs): the Arrow collect of bins×vocab partial rows through
-    # mapInPandas→toPandas cost ~0.1-0.3 s of pure serial driver time
-    # per build; a pyarrow write per task + ONE driver read replaces it
-    # and the job's action shrinks to a count of one ack row per task
-    partials_dir = os.path.join(post_dir, "_partials")
-    shutil.rmtree(partials_dir, ignore_errors=True)
+    # pyarrow listers): the Arrow collect of bins×vocab partial rows
+    # through mapInPandas→toPandas cost ~0.1-0.3 s of pure serial driver
+    # time per build; a pyarrow write per task + ONE driver read
+    # replaces it and the job's action shrinks to one ack row per task
+    partials_dir = f"{post}/_partials"
+    _rm_dir(pfs, partials_dir)
     if collect_meta:
-        os.makedirs(partials_dir, exist_ok=True)
+        pfs.create_dir(partials_dir)
+    want = None if ranges is None else sorted(int(r) for r in ranges)
+    skip = sorted(int(r) for r in (skip or ()))
+
+    def built_mask(rid: np.ndarray) -> np.ndarray:
+        m = np.ones(rid.size, dtype=bool) if want is None \
+            else np.isin(rid, want)
+        return m & ~np.isin(rid, skip) if skip else m
+
+    def wants(lo: int, hi: int) -> bool:
+        if want is None:
+            return hi - lo + 1 > sum(lo <= r <= hi for r in skip)
+        return any(lo <= r <= hi and r not in skip for r in want)
+
+    dfs, doc_infos = list_parquet_files(spark, docs_dir)
+    spans = {i.base_name: range_span(dfs, i.path) for i in doc_infos}
+    items = [("build", i.base_name, i.size) for i in doc_infos
+             if spans[i.base_name] and wants(*spans[i.base_name])]
+    picked = sorted(spans[n] for _k, n, _s in items)
+    if any(b[0] <= a[1] for a, b in zip(picked, picked[1:])):
+        # footer intervals overlap (e.g. a packed snapshot write):
+        # settle ownership from the range_id column itself
+        owner: dict[int, str] = {}
+        built = {n for _k, n, _s in items}
+        for i in (i for i in doc_infos if i.base_name in built):
+            rids = np.unique(pq.read_table(i.path, filesystem=dfs,
+                                           columns=["range_id"])
+                             .column(0).to_numpy())
+            for r in rids[built_mask(rids)].tolist():
+                if owner.setdefault(r, i.base_name) != i.base_name:
+                    raise ValueError(
+                        f"range {r} spans docs files {owner[r]} and "
+                        f"{i.base_name}: the postings writer needs each "
+                        "range whole in one file")
     nb = int(n_buckets)
-    skip = sorted(int(r) for r in (completed_ranges or ()))
     spimi = _spimi_batches()
 
     def task(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow as pa
-        import pyarrow.parquet as pq
+        import pyarrow.fs as pafs
 
         # one C++ thread per task: Arrow's pool defaults to ALL host
         # CPUs PER PROCESS, so N concurrent tasks would run N×cpus
@@ -544,173 +661,189 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
         # Parallelism here comes from Spark's task slots, not Arrow.
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
+        dst_fs, dst = pafs.FileSystem.from_uri(post_uri)
+        src_fs, src = pafs.FileSystem.from_uri(docs_uri)
+        if carry_uri:
+            old_fs, old = pafs.FileSystem.from_uri(carry_uri)
         partials: list[pd.DataFrame] = []
-        seen_bins: list[int] = []
-
-        def _paths_of(b: int) -> list[str]:
-            seen_bins.append(b)
-            return bins[b]
-
         for fdf in it:
-            for path in (p for b in fdf["bin"]
-                         for p in _paths_of(int(b))):
-                tbl = pq.read_table(
-                    path, columns=["doc_id", "text", "range_id"],
-                    use_threads=False)
-                dpdf = tbl.to_pandas()
-                if skip:
-                    dpdf = dpdf[~dpdf["range_id"].isin(skip)]
-                if not len(dpdf):
-                    continue
-                out = pd.concat(list(spimi(iter([dpdf]))),
-                                ignore_index=True)
-                if not len(out):
-                    continue
-                uniq, inv = np.unique(out["term"].to_numpy(str),
-                                      return_inverse=True)
-                b_u = np.fromiter(
-                    (zlib.crc32(t.encode("utf-8")) % nb for t in uniq),
-                    dtype=np.int32, count=uniq.size)
-                out["bucket"] = b_u[inv]
-                out = out.sort_values(["bucket", "term"],
-                                      kind="mergesort",
-                                      ignore_index=True)
-                out["range_id"] = out["range_id"].astype("int32")
-                ranges = out["range_id"].to_numpy()
-                lo, hi = int(ranges.min()), int(ranges.max())
-                fname = os.path.join(
-                    post_dir, f"part-pyio-r{lo:05d}-{hi:05d}.parquet")
-                patbl = pa.Table.from_pandas(
-                    out, schema=_postings_arrow_schema(),
-                    preserve_index=False)
-                pq.write_table(patbl, fname, compression="snappy")
-                if not collect_meta:
-                    continue
-                # retain ONLY the metadata columns per file; the actual
-                # partial aggregation runs once per TASK below (the
-                # per-file pandas groupbys measured ~25 ms each — 0.8 s
-                # of serialized overhead across a 32-file build)
-                partials.append(out[["term", "range_id", "n", "cf",
-                                     "n_bytes", "wall_ms"]])
+            for b in fdf["bin"]:  # one bin per task
+                for kind, name in bins[int(b)]:
+                    if kind == "carry":
+                        _carry(old_fs, f"{old}/{name}", dst_fs, dst, name)
+                        continue
+                    dpdf = pq.read_table(
+                        f"{src}/{name}", filesystem=src_fs,
+                        columns=["doc_id", "text", "range_id"],
+                        use_threads=False).to_pandas()
+                    dpdf = dpdf[built_mask(dpdf["range_id"].to_numpy())]
+                    out = _build_file(dpdf, dst_fs, dst)
+                    if collect_meta and out is not None:
+                        # retain ONLY the metadata columns per file; the
+                        # partial aggregation runs once per TASK below
+                        # (the per-file pandas groupbys measured ~25 ms
+                        # each — 0.8 s of serialized overhead across a
+                        # 32-file build)
+                        partials.append(out[["term", "range_id", "n", "cf",
+                                             "n_bytes", "wall_ms"]])
         if collect_meta and partials:
-            # derived-tables partials, ONE aggregation pass per task:
-            # gid=2 manifest rows (complete — a range never spans files
-            # or tasks), gid=1 per-term dictionary partial sums folded
-            # across this task's files. Written as a SIDE FILE under
-            # _partials/ (deterministic per-bin name — retries overwrite
-            # idempotently) and read back with ONE driver pyarrow read:
-            # collecting bins×vocab rows through mapInPandas→toPandas
-            # cost ~0.1-0.3 s of serial driver time per build.
-            # n_terms=('term','size') relies on the one-row-per-
-            # (term, range) invariant of the SPIMI kernel; sum_cf is
-            # computed for real so no column carries placeholder values
-            # a future consumer could misread; dropna=False keeps a
-            # genuinely-NULL term alive (the fused Spark epilogue's
-            # gid-split preserves it too).
-            m = pd.concat(partials, ignore_index=True)
-            man = (m.groupby("range_id", sort=False)
-                   .agg(sum_n=("n", "sum"), sum_cf=("cf", "sum"),
-                        n_terms=("term", "size"),
-                        bytes=("n_bytes", "sum"),
-                        wall_ms=("wall_ms", "max"))
-                   .reset_index())
-            man["gid"] = 2
-            man["term"] = None
-            dic = (m.groupby("term", sort=False, dropna=False)
-                   .agg(sum_n=("n", "sum"), sum_cf=("cf", "sum"))
-                   .reset_index())
-            dic["gid"] = 1
-            dic["range_id"] = -1
-            dic["n_terms"] = 0
-            dic["bytes"] = 0
-            dic["wall_ms"] = 0
-            cols = ["gid", "term", "range_id", "sum_n", "sum_cf",
-                    "n_terms", "bytes", "wall_ms"]
-            folded = pd.concat([man[cols], dic[cols]], ignore_index=True)
-            pq.write_table(
-                pa.Table.from_pandas(folded, preserve_index=False),
-                os.path.join(partials_dir,
-                             f"part-b{min(seen_bins):05d}.parquet"))
+            _write_partials(pd.concat(partials, ignore_index=True), dst_fs,
+                            f"{dst}/_partials/part-b{int(b):05d}.parquet")
         yield pd.DataFrame({"ok": [1]})
 
+    def _build_file(dpdf, fs, dst):
+        import pyarrow as pa
+
+        outs = list(spimi(iter([dpdf]))) if len(dpdf) else []
+        if not outs:
+            return None
+        out = pd.concat(outs, ignore_index=True)
+        uniq, inv = np.unique(out["term"].to_numpy(str), return_inverse=True)
+        b_u = np.fromiter((zlib.crc32(t.encode("utf-8")) % nb for t in uniq),
+                          dtype=np.int32, count=uniq.size)
+        out["bucket"] = b_u[inv]
+        out["range_id"] = out["range_id"].astype("int32")
+        out = out.sort_values(["range_id", "bucket", "term"],
+                              kind="mergesort", ignore_index=True)
+        # one file per range: footer range_id intervals never overlap,
+        # whatever ranges a docs file or a carried file holds
+        rids = out["range_id"].to_numpy()
+        cuts = np.flatnonzero(np.diff(rids)) + 1
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, rids.size]):
+            _write_postings_file(
+                pa.Table.from_pandas(out.iloc[lo:hi],
+                                     schema=_postings_arrow_schema(),
+                                     preserve_index=False), fs,
+                f"{dst}/part-pyio-r{int(rids[lo]):05d}-{int(rids[lo]):05d}"
+                ".parquet")
+        return out
+
+    def _carry(old_fs, src_path, fs, dst, name):
+        import pyarrow as pa
+        import pyarrow.fs as pafs
+
+        rid = pq.read_table(src_path, filesystem=old_fs,
+                            columns=["range_id"]).column(0).to_numpy()
+        drop = built_mask(rid)
+        if not drop.any():
+            if not in_place:
+                pafs.copy_files(src_path, f"{dst}/{name}",
+                                source_filesystem=old_fs,
+                                destination_filesystem=fs)
+            return
+        kept = pq.read_table(src_path, filesystem=old_fs).filter(
+            pa.array(~drop))
+        if kept.num_rows:
+            k = rid[~drop]
+            _write_postings_file(
+                kept, fs, f"{dst}/part-pyio-r{int(k.min()):05d}-"
+                f"{int(k.max()):05d}-{zlib.crc32(name.encode()):08x}"
+                ".parquet")
+        if in_place:
+            old_fs.delete_file(src_path)
+
+    if carry_uri:
+        cfs, carry_infos = list_parquet_files(spark, carry_from)
+        for i in carry_infos:
+            span = range_span(cfs, i.path)
+            if span is None or (in_place and not wants(*span)):
+                continue
+            if in_place:
+                # before the job: a built file may take the name of a
+                # crashed run's file that still has to be filtered
+                _carry(cfs, i.path, pfs, post, i.base_name)
+            else:
+                items.append(("carry", i.base_name, i.size))
+
     # task granularity: ONE wave of slots. Each mapInPandas task costs a
-    # fixed JVM↔worker turnaround (~140 ms measured on this sandbox —
+    # fixed JVM↔worker turnaround (~140 ms measured on a 4-CPU box —
     # socket-heavy task protocol), so one-file-per-task serializes
     # len(files) of that overhead through the scheduler when files
     # outnumber slots — pack files into min(len(files), slots) bins,
     # largest-first (LPT, ≤4/3·OPT imbalance): the per-task constant is
-    # paid once per slot and there is no wave-boundary barrier (round 6;
-    # the previous 2·slots granularity cost an extra ~0.2 s at the
-    # scaling bench's local[4] level for no measurable balance win on
-    # near-uniform range files). On a real cluster slots ≫ files keeps
-    # one file per task.
+    # paid once per slot and there is no wave-boundary barrier (a
+    # 2·slots granularity cost an extra ~0.2 s at the scaling bench's
+    # local[4] level for no measurable balance win on near-uniform
+    # range files). On a real cluster slots ≫ files keeps one file per
+    # task.
     slots = max(1, spark.sparkContext.defaultParallelism)
-    n_bins = max(1, min(len(files), slots))
-    bins: list[list[str]] = [[] for _ in range(n_bins)]
-    loads = [0] * n_bins
-    for f in sorted(files, key=os.path.getsize, reverse=True):
-        i = loads.index(min(loads))
-        bins[i].append(f)
-        loads[i] += os.path.getsize(f)
-    bins.sort(key=lambda b: -sum(os.path.getsize(f) for f in b))
+    n_bins = max(1, min(len(items), slots))
+    bins = lpt_bins([((k, n), s) for k, n, s in items], n_bins)
     # bin ids distributed via spark.range (one id per partition, pure
-    # JVM): the previous parallelize(...).flatMap path evaluated a
-    # pickled Python RDD under the mapInPandas stage, and the FIRST such
-    # chain in a JVM pays ~1s of plain-pickle worker/serializer init
-    # that the Arrow runner warm-up never touches (measured round 6:
-    # first-job task lag 1.21s vs 0.20s warm) — a pure constant inside
-    # the timed build. The bins list rides in the task closure.
+    # JVM): a parallelize(...).flatMap chain would evaluate a pickled
+    # Python RDD under the mapInPandas stage, and the FIRST such chain
+    # in a JVM pays ~1s of plain-pickle worker/serializer init that the
+    # Arrow runner warm-up never touches (measured: first-job task lag
+    # 1.21s vs 0.20s warm) — a pure constant inside the timed build.
+    # The bins list rides in the task closure.
     # action = collect() of the n_bins one-row acks, NOT count(): count
     # adds a partial/final aggregate pair whose one-row exchange AQE
     # materializes as an extra query stage — measured ~80 ms of pure
-    # scheduling per job on this sandbox; collect is a single stage
-    (spark.range(0, n_bins, 1, numPartitions=n_bins)
-     .withColumnRenamed("id", "bin")
-     .mapInPandas(task, schema="ok long")
-     .collect())
+    # scheduling per job; collect is a single stage
+    if items:
+        (spark.range(0, n_bins, 1, numPartitions=n_bins)
+         .withColumnRenamed("id", "bin")
+         .mapInPandas(task, schema="ok long")
+         .collect())
     if not collect_meta:
-        return True
-    import glob as _glob
-
-    pfiles = sorted(_glob.glob(os.path.join(partials_dir, "*.parquet")))
-    if pfiles:
-        import pyarrow.parquet as pq
-
-        meta = pq.read_table(pfiles).to_pandas()
-    else:  # empty corpus: no task produced postings
-        meta = pd.DataFrame({
-            "gid": pd.Series(dtype="int64"),
-            "term": pd.Series(dtype=object),
-            "range_id": pd.Series(dtype="int64"),
-            "sum_n": pd.Series(dtype="int64"),
-            "sum_cf": pd.Series(dtype="int64"),
-            "n_terms": pd.Series(dtype="int64"),
-            "bytes": pd.Series(dtype="int64"),
-            "wall_ms": pd.Series(dtype="int64"),
-        })
-    shutil.rmtree(partials_dir, ignore_errors=True)
+        return None
+    pinfos = list_parquet_files(spark, f"{postings_dir}/_partials")[1]
+    meta = (pq.read_table([i.path for i in pinfos], filesystem=pfs)
+            .to_pandas() if pinfos  # none: empty corpus
+            else pd.DataFrame(columns=_PARTIAL_COLS))
+    _rm_dir(pfs, partials_dir)
     return meta
+
+
+_PARTIAL_COLS = ["gid", "term", "range_id", "sum_n", "sum_cf", "n_terms",
+                 "bytes", "wall_ms"]
+
+
+def _write_partials(m: pd.DataFrame, fs, path: str) -> None:
+    """Derived-tables partials of one task, ONE aggregation pass: gid=2
+    manifest rows (complete — a range never spans files or tasks), gid=1
+    per-term dictionary partial sums folded across the task's files.
+    Written as a SIDE FILE under _partials/ (deterministic per-bin name
+    — retries overwrite idempotently). n_terms=('term','size') relies on
+    the one-row-per-(term, range) invariant of the SPIMI kernel; sum_cf
+    is computed for real so no column carries placeholder values a
+    future consumer could misread; dropna=False keeps a genuinely-NULL
+    term alive (the fused Spark epilogue's gid-split preserves it too)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    man = (m.groupby("range_id", sort=False)
+           .agg(sum_n=("n", "sum"), sum_cf=("cf", "sum"),
+                n_terms=("term", "size"),
+                bytes=("n_bytes", "sum"),
+                wall_ms=("wall_ms", "max"))
+           .reset_index())
+    man["gid"] = 2
+    man["term"] = None
+    dic = (m.groupby("term", sort=False, dropna=False)
+           .agg(sum_n=("n", "sum"), sum_cf=("cf", "sum"))
+           .reset_index())
+    dic["gid"] = 1
+    dic["range_id"] = -1
+    dic["n_terms"] = 0
+    dic["bytes"] = 0
+    dic["wall_ms"] = 0
+    folded = pd.concat([man[_PARTIAL_COLS], dic[_PARTIAL_COLS]],
+                       ignore_index=True)
+    pq.write_table(pa.Table.from_pandas(folded, preserve_index=False),
+                   path, filesystem=fs)
 
 
 def build_postings(spark: SparkSession, out_dir: str,
                    num_ranges: int = 16, n_buckets: int = DEFAULT_BUCKETS,
-                   completed_ranges: set[int] | None = None,
-                   python_io: bool | None = None) -> IndexPaths:
+                   completed_ranges: set[int] | None = None) -> IndexPaths:
     """Phase B: the indexing job — docs table → postings + dictionary +
     stats + manifest.
 
     ``completed_ranges`` (from :func:`resume_info`) skips already-committed
-    ranges — the resumable-checkpoint path (manifest anti-join).
-
-    ``python_io``: True forces the python-native-I/O SPIMI stage
-    (:func:`_spimi_python_io`), False forces the JVM scan/write path,
-    None (default) auto-selects pyio when the docs table is local
-    range-aligned parquet and the target isn't a legacy
-    bucket-partitioned layout.
+    ranges — the resumable-checkpoint path (manifest anti-join); rows a
+    crashed run wrote for the other ranges are dropped first.
     """
-    import os
-
-    timing = os.environ.get("SPARK_GRAFT_TIMING") == "1"
     t0 = time.monotonic()
     timings: dict[str, float] = {}
 
@@ -718,122 +851,27 @@ def build_postings(spark: SparkSession, out_dir: str,
         nonlocal t0
         now = time.monotonic()
         timings[label] = timings.get(label, 0.0) + (now - t0)
-        if timing:
-            print(f"[indexer] {label}: {now - t0:.2f}s", flush=True)
         t0 = now
 
     paths = IndexPaths(out_dir)
-    mode = "append" if completed_ranges else "overwrite"
-    # docs table handles are LAZY (round 6): spark.read.parquet pays a
-    # file-listing + schema job on the driver before any work, and the
-    # pyio path never needs the JVM scan at all — only the JVM fallback
-    # (and the legacy no-docs_meta stats probe) materializes it
-    _docs_tbl: list = [None]
-
-    def docs_tbl():
-        if _docs_tbl[0] is None:
-            _docs_tbl[0] = spark.read.parquet(paths.docs)
-        return _docs_tbl[0]
-
-    def docs_columns() -> list[str]:
-        if _is_local_path(paths.docs, spark):
-            import glob as _glob
-
-            p = paths.docs[7:] if paths.docs.startswith("file://") \
-                else paths.docs
-            fs = sorted(_glob.glob(os.path.join(p, "*.parquet")))
-            if fs:
-                import pyarrow.parquet as pq
-
-                return list(pq.ParquetFile(fs[0]).schema_arrow.names)
-        return list(docs_tbl().columns)
-
-    try:
-        m = read_small_table(spark, paths.docs_meta).iloc[0]
-        N, avgdl = int(m["N"]), float(m["avgdl"])
-    except Exception:  # pre-docs_meta layout: one aggregate over docs
-        g = docs_tbl().agg(F.count("*").alias("N"),
-                           F.avg("dl").alias("avgdl")).collect()[0]
-        N, avgdl = int(g["N"]), float(g["avgdl"] or 0.0)
-    docs_per_range = max(1, -(-N // num_ranges))  # ceil (legacy/stats)
+    m = read_small_table(spark, paths.docs_meta).iloc[0]
+    N, avgdl = int(m["N"]), float(m["avgdl"])
+    docs_per_range = max(1, -(-N // num_ranges))  # ceil (stats)
     tick("stats_read")
 
-    use_pyio = python_io
-    if use_pyio is None:
-        from .streaming import _bucket_partitioned
-        use_pyio = ("range_id" in docs_columns()
-                    and not (mode == "append"
-                             and _bucket_partitioned(paths.postings)))
+    if completed_ranges:
+        require_current_layout(spark, paths)
     # piggy-back the derived-tables partials on the SPIMI job itself
     # only when the whole index is being (re)built small enough for
-    # the driver-side epilogue — on append/resume the partials would
-    # miss the already-committed ranges.
-    want_meta = (N <= SMALL_DERIVED_DOCS_MAX and mode == "overwrite"
-                 and not completed_ranges)
-    meta_partials = None
-    pyio_done = False
-    if use_pyio:
-        r = _spimi_python_io(spark, paths, n_buckets, mode,
-                             completed_ranges, collect_meta=want_meta)
-        if r is not False:
-            pyio_done = True
-            if want_meta and isinstance(r, pd.DataFrame):
-                meta_partials = r
-    if pyio_done:
-        tick("spimi_write")
-    else:
-        # JVM fallback: read docs with NO file splitting and NO file
-        # packing — one partition per docs file = one (or more whole)
-        # doc range(s), so the SPIMI stage needs no repartition and
-        # the build stays SHUFFLE-FREE
-        conf = spark.conf
-        old_mpb = conf.get("spark.sql.files.maxPartitionBytes", None)
-        old_ocb = conf.get("spark.sql.files.openCostInBytes", None)
-        conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
-        conf.set("spark.sql.files.openCostInBytes", str(1 << 40))
-        _docs_tbl[0] = None  # re-read under the no-split conf
-        docs_scan = docs_tbl()
-        if "range_id" in docs_scan.columns:
-            # prepare-assigned ranges: zero-shuffle
-            spimi_in = docs_scan.select("doc_id", "text", "range_id")
-        else:
-            # legacy docs table without stored ranges: derive fixed-width
-            # ranges from doc_id and shuffle once onto them
-            indexable = docs_scan.withColumn(
-                "range_id",
-                (F.col("doc_id") / F.lit(docs_per_range)).cast("int"))
-            spimi_in = (indexable.select("doc_id", "text", "range_id")
-                        .repartitionByRange(num_ranges, "range_id"))
-        if completed_ranges:
-            spimi_in = spimi_in.filter(
-                ~F.col("range_id").isin(*[int(r) for r in completed_ranges]))
-        postings = spimi_in.mapInPandas(
-            _spimi_batches(), schema=POSTINGS_SCHEMA)
-        postings = postings.withColumn(
-            "bucket", term_bucket_col(F.col("term"), n_buckets))
-        # flat write, sorted by (bucket, term) within each task: query-time
-        # bucket/term filters prune via parquet row-group min/max stats —
-        # same pruning power as directory partitioning without the dynamic
-        # -partition writer's sort + many-small-files commit cost
-        w = postings.sortWithinPartitions("bucket", "term").write.mode(mode)
-        if mode == "append":
-            from .streaming import _bucket_partitioned
-            if _bucket_partitioned(paths.postings):
-                # resuming onto a legacy bucket=N/ partitioned index: a
-                # root-level flat append would be invisible to partition
-                # discovery — keep the dir's own layout
-                w = w.partitionBy("bucket")
-        try:
-            w.parquet(paths.postings)
-        finally:
-            for key, old in (
-                    ("spark.sql.files.maxPartitionBytes", old_mpb),
-                    ("spark.sql.files.openCostInBytes", old_ocb)):
-                if old is None:
-                    conf.unset(key)
-                else:
-                    conf.set(key, old)
-        tick("spimi_write")
+    # the driver-side epilogue — on resume the partials would miss the
+    # already-committed ranges.
+    meta_partials = write_postings(
+        spark, paths.docs, paths.postings, n_buckets,
+        mode="append" if completed_ranges else "overwrite",
+        skip=completed_ranges,
+        carry_from=paths.postings if completed_ranges else None,
+        collect_meta=not completed_ranges and N <= SMALL_DERIVED_DOCS_MAX)
+    tick("spimi_write")
 
     refresh_derived_tables(spark, paths, N=N, avgdl=avgdl,
                            docs_per_range=docs_per_range,
@@ -851,9 +889,11 @@ def refresh_derived_tables(spark: SparkSession, paths: IndexPaths, *,
                            num_ranges: int, n_buckets: int,
                            refresh_doc_stats: bool = False,
                            meta_partials: pd.DataFrame | None = None,
+                           avgdl_build: float | None = None,
                            _tick=None) -> None:
     """dictionary / stats / manifest from the postings table (shared by
-    build, maintenance, and streaming rollback).
+    build, maintenance, and streaming rollback). ``avgdl_build``
+    defaults to ``avgdl``; a snapshot passes its source's value.
 
     Reads ONLY the metadata columns of postings (term, range_id, n, cf,
     n_bytes, wall_ms — the binary payloads are never touched: parquet
@@ -877,22 +917,17 @@ def refresh_derived_tables(spark: SparkSession, paths: IndexPaths, *,
     use_small = N <= SMALL_DERIVED_DOCS_MAX
     fused = None
     if meta_partials is not None and use_small:
-        # the SPIMI tasks already returned the two grouping-set partials
+        # the SPIMI tasks already wrote the two grouping-set partials
         # (piggy-backed on the build job): finish them with a pandas
         # groupby — NO epilogue Spark job at all. Manifest (gid=2) rows
         # arrive complete (a range never spans files); dictionary
-        # (gid=1) partial sums fold across files here.
-        mp = meta_partials[meta_partials["gid"] != 0]
+        # (gid=1) partial sums fold across tasks here.
+        mp = meta_partials
         d = (mp[mp["gid"] == 1]
              .groupby("term", sort=False, as_index=False)
              .agg(sum_n=("sum_n", "sum"), sum_cf=("sum_cf", "sum")))
         d["gid"] = 1
-        d["range_id"] = None
-        d["n_terms"] = 0
-        d["bytes"] = 0
-        d["wall_ms"] = 0
-        m = mp[mp["gid"] == 2].copy()
-        probe = pd.concat([d, m], ignore_index=True)
+        probe = pd.concat([d, mp[mp["gid"] == 2]], ignore_index=True)
     else:
         meta_cols = spark.read.parquet(paths.postings).select(
             "term", "range_id", "n", "cf", "n_bytes", "wall_ms")
@@ -966,13 +1001,10 @@ def refresh_derived_tables(spark: SparkSession, paths: IndexPaths, *,
         write_small_table(spark, man_pdf, paths.manifest)
 
     def _stats_job():
-        stats_pdf = pd.DataFrame([{
-            "N": N, "avgdl": avgdl, "avgdl_build": avgdl,
-            "docs_per_range": docs_per_range, "num_ranges": num_ranges,
-            "n_buckets": n_buckets, "analyzer_version": ANALYZER_VERSION,
-            "k1": BM25_K1, "b": BM25_B,
-        }])
-        write_small_table(spark, stats_pdf, paths.stats)
+        write_stats(spark, paths, N=N, avgdl=avgdl,
+                    avgdl_build=avgdl if avgdl_build is None else avgdl_build,
+                    docs_per_range=docs_per_range, num_ranges=num_ranges,
+                    n_buckets=n_buckets)
 
     if use_small:
         jobs = [_small_derived_job, _stats_job]
@@ -990,6 +1022,44 @@ def refresh_derived_tables(spark: SparkSession, paths: IndexPaths, *,
     tick("derived_tables")
     if not use_small:
         fused.unpersist()
+
+
+def write_stats(spark: SparkSession, paths: IndexPaths, *, N: int,
+                avgdl: float, avgdl_build: float, docs_per_range: int,
+                num_ranges: int, n_buckets: int) -> None:
+    """The one-row ``stats`` table the query side scores with."""
+    write_small_table(spark, pd.DataFrame([{
+        "N": N, "avgdl": avgdl, "avgdl_build": avgdl_build,
+        "docs_per_range": docs_per_range, "num_ranges": num_ranges,
+        "n_buckets": n_buckets, "analyzer_version": ANALYZER_VERSION,
+        "k1": BM25_K1, "b": BM25_B,
+    }]), paths.stats)
+
+
+def write_docs_meta(spark: SparkSession, paths: IndexPaths
+                    ) -> tuple[int, float]:
+    """docs_meta (N, Σdl, avgdl) from the docs table; → (N, avgdl)."""
+    g = (spark.read.parquet(paths.docs)
+         .agg(F.count("*").alias("N"), F.sum("dl").alias("s")).collect()[0])
+    N, sum_dl = int(g["N"]), int(g["s"] or 0)
+    avgdl = (sum_dl / N) if N else 0.0
+    write_small_table(spark, pd.DataFrame(
+        [{"N": N, "sum_dl": sum_dl, "avgdl": avgdl}]), paths.docs_meta)
+    return N, avgdl
+
+
+def refresh_derived_full(spark: SparkSession, paths: IndexPaths, *,
+                         docs_per_range: int, num_ranges: int,
+                         n_buckets: int,
+                         avgdl_build: float | None = None) -> None:
+    """Every derived table of an index whose docs changed (snapshots,
+    streaming rollback): N/avgdl/doc_stats/docs_meta from the docs,
+    the rest from the postings."""
+    N, avgdl = write_docs_meta(spark, paths)
+    refresh_derived_tables(spark, paths, N=N, avgdl=avgdl,
+                           docs_per_range=docs_per_range,
+                           num_ranges=num_ranges, n_buckets=n_buckets,
+                           refresh_doc_stats=True, avgdl_build=avgdl_build)
 
 
 def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,

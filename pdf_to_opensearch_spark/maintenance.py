@@ -6,11 +6,13 @@ idempotent re-ingestion of one source. Here:
 
 - :func:`delete_from_index` — copy-on-write snapshot: postings of
   *affected doc ranges only* are rebuilt from the surviving docs (doc_ids
-  preserved), unaffected ranges' parquet rows are carried over unchanged;
-  stats are recomputed (N, avgdl shift). Block-max pruning stays SOUND
-  across the shift because blocks store raw (max_tf, min_dl) and the
-  query engine recomputes upper bounds at the CURRENT avgdl — the bound
-  is valid at any avgdl, no rebuild needed.
+  preserved) by the build's own writer
+  (:func:`~.indexer.write_postings`); unaffected ranges' postings carry
+  over (file copied, or rewritten without the affected rows); the
+  derived tables are recomputed (N, avgdl shift). Block-max pruning
+  stays SOUND across the shift because blocks store raw (max_tf,
+  min_dl) and the query engine recomputes upper bounds at the CURRENT
+  avgdl — the bound is valid at any avgdl, no rebuild needed.
 - :func:`reingest` — the full delete-then-reinsert idempotency path: drop
   matching docs from the source, rebuild from scratch; byte-identical
   output for identical input (tested).
@@ -18,19 +20,18 @@ idempotent re-ingestion of one source. Here:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import ANALYZER_VERSION
 from .indexer import (
-    POSTINGS_SCHEMA,
     IndexPaths,
-    _spimi_batches,
     build_index,
-    term_bucket_col,
+    file_aligned_session,
+    read_small_table,
+    refresh_derived_full,
+    require_current_layout,
+    write_postings,
 )
-from .query import load_stats
 
 
 def _snapshot_space(spark: SparkSession, src: IndexPaths, dst: IndexPaths,
@@ -39,72 +40,21 @@ def _snapshot_space(spark: SparkSession, src: IndexPaths, dst: IndexPaths,
                     docs_per_range: int | None = None) -> None:
     """Copy-on-write snapshot of ONE posting space (the root index or a
     per-field space): write the surviving docs, rebuild postings of the
-    affected ranges only (unaffected ranges' parquet rows carry over
-    unchanged), and recompute the space's derived tables (dictionary,
-    doc_stats, docs_meta, stats, manifest). ``survivors`` must carry
-    (doc_id, text, range_id, dl)."""
-    stats = load_stats(spark, src.root)
-    st_row = spark.read.parquet(src.stats).collect()[0]
-    docs_per_range = docs_per_range or int(st_row["docs_per_range"])
-    num_ranges = num_ranges or int(st_row["num_ranges"])
-    n_buckets = int(st_row["n_buckets"])
-
+    affected ranges only while the other ranges' postings carry over,
+    and recompute the space's derived tables. ``survivors`` must carry
+    (doc_id, text, range_id, dl), each range whole in one partition
+    (read through :func:`~.indexer.file_aligned_session`)."""
+    st = read_small_table(spark, src.stats).iloc[0]
     # keep range_id in the snapshot: the ranges remain the SPIMI unit
     survivors.write.mode("overwrite").parquet(dst.docs)
-
-    old_postings = spark.read.parquet(src.postings)
-    untouched = old_postings.filter(~F.col("range_id").isin(*affected)) \
-        if affected else old_postings
-    if affected:
-        rebuild_in = (spark.read.parquet(dst.docs)
-                      .filter(F.col("range_id").isin(*affected))
-                      .select("doc_id", "text", "range_id")
-                      .repartitionByRange(max(len(affected), 1), "range_id"))
-        rebuilt = rebuild_in.mapInPandas(
-            _spimi_batches(), schema=POSTINGS_SCHEMA)
-        rebuilt = rebuilt.withColumn(
-            "bucket", term_bucket_col(F.col("term"), n_buckets))
-        new_postings = untouched.unionByName(rebuilt)
-    else:
-        new_postings = untouched
-    (new_postings.sortWithinPartitions("bucket", "term")
-     .write.mode("overwrite").parquet(dst.postings))
-
-    built = spark.read.parquet(dst.postings).select(
-        "term", "range_id", "n", "cf", "n_bytes", "wall_ms").persist()
-    (built.groupBy("term")
-     .agg(F.sum("n").alias("df"), F.sum("cf").alias("cf"))
-     .write.mode("overwrite").parquet(dst.dictionary))
-    surv_tbl = spark.read.parquet(dst.docs)
-    (surv_tbl.select("doc_id", "dl")
-     .write.mode("overwrite").parquet(dst.doc_stats))
-    g = surv_tbl.agg(F.count("*").alias("N"), F.sum("dl").alias("s")).collect()[0]
-    N_s = int(g["N"])
-    sum_dl = int(g["s"] or 0)
-    from .indexer import write_small_table
-
-    meta = pd.DataFrame([{"N": N_s, "sum_dl": sum_dl,
-                          "avgdl": (sum_dl / N_s) if N_s else 0.0}])
-    write_small_table(spark, meta, dst.docs_meta)
-    stats_pdf = pd.DataFrame([{
-        "N": N_s, "avgdl": (sum_dl / N_s) if N_s else 0.0,
-        "avgdl_build": stats.avgdl_build,
-        "docs_per_range": docs_per_range,
-        "num_ranges": num_ranges, "n_buckets": n_buckets,
-        "analyzer_version": ANALYZER_VERSION,
-        "k1": stats.k1, "b": stats.b,
-    }])
-    write_small_table(spark, stats_pdf, dst.stats)
-    (built.groupBy("range_id")
-     .agg(F.sum("n").alias("n_postings"),
-          F.countDistinct("term").alias("n_terms"),
-          F.sum("n_bytes").alias("bytes"),
-          F.max("wall_ms").alias("wall_ms"))
-     .withColumn("status", F.lit("committed"))
-     .withColumn("analyzer_version", F.lit(ANALYZER_VERSION))
-     .withColumn("committed_at", F.current_timestamp())
-     .write.mode("overwrite").parquet(dst.manifest))
-    built.unpersist()
+    write_postings(spark, dst.docs, dst.postings, int(st["n_buckets"]),
+                   ranges=affected, carry_from=src.postings)
+    refresh_derived_full(
+        spark, dst,
+        docs_per_range=docs_per_range or int(st["docs_per_range"]),
+        num_ranges=num_ranges or int(st["num_ranges"]),
+        n_buckets=int(st["n_buckets"]),
+        avgdl_build=float(st["avgdl_build"]))
 
 
 def delete_from_index(spark: SparkSession, index_dir: str, out_dir: str,
@@ -122,13 +72,11 @@ def delete_from_index(spark: SparkSession, index_dir: str, out_dir: str,
 
     src = IndexPaths(index_dir)
     dst = IndexPaths(out_dir)
-    st_row = spark.read.parquet(src.stats).collect()[0]
-    docs_per_range = int(st_row["docs_per_range"])
-
-    docs = spark.read.parquet(src.docs)
-    if "range_id" not in docs.columns:  # legacy fixed-width ranges
-        docs = docs.withColumn(
-            "range_id", (F.col("doc_id") / F.lit(docs_per_range)).cast("int"))
+    require_current_layout(spark, src)
+    # one partition per docs file: a delete moves no doc between ranges,
+    # so the survivors stay range-aligned with no shuffle
+    fa = file_aligned_session(spark)
+    docs = fa.read.parquet(src.docs)
     from .query import IN_LIST_MAX
 
     if len(urls) <= IN_LIST_MAX:
@@ -138,7 +86,7 @@ def delete_from_index(spark: SparkSession, index_dir: str, out_dir: str,
     else:
         # thousands of urls: literal IN-lists bloat the plan — broadcast
         # semi/anti joins instead
-        udf_ = spark.createDataFrame([(u,) for u in urls], "url string")
+        udf_ = fa.createDataFrame([(u,) for u in urls], "url string")
         doomed = docs.join(F.broadcast(udf_), "url", "left_semi")
         survivors = docs.join(F.broadcast(udf_), "url", "left_anti")
     affected = {int(r["range_id"]) for r in
@@ -155,7 +103,7 @@ def delete_from_index(spark: SparkSession, index_dir: str, out_dir: str,
         for fname in fnames:
             fsrc = IndexPaths(field_root(index_dir, fname))
             fdst = IndexPaths(field_root(out_dir, fname))
-            f_surv = (spark.read.parquet(fsrc.docs)
+            f_surv = (fa.read.parquet(fsrc.docs)
                       .join(F.broadcast(doomed_ids), "doc_id", "left_anti"))
             _snapshot_space(spark, fsrc, fdst, f_surv, affected)
     return dst
@@ -178,35 +126,31 @@ def force_merge(spark: SparkSession, index_dir: str, out_dir: str,
     ranges). Field posting spaces compact the same way — same doc_ids,
     same new range map, same affected set.
 
-    The changed-range detection is three O(num_ranges) aggregates
-    collected to the driver — at 10^12 docs / 10^6 ranges that is
-    megabytes, not a data-scale collect.
+    The changed-range detection is one aggregate over (old, new) range
+    pairs collected to the driver — O(num_ranges) rows, megabytes at
+    10^12 docs / 10^6 ranges, not a data-scale collect.
     """
     src = IndexPaths(index_dir)
     dst = IndexPaths(out_dir)
-    st_row = spark.read.parquet(src.stats).collect()[0]
-    dpr = docs_per_range or int(st_row["docs_per_range"])
+    require_current_layout(spark, src)
+    dpr = docs_per_range or int(
+        read_small_table(spark, src.stats).iloc[0]["docs_per_range"])
 
-    docs = spark.read.parquet(src.docs)
-    if "range_id" not in docs.columns:  # legacy fixed-width ranges
-        docs = docs.withColumn(
-            "range_id", (F.col("doc_id") / F.lit(dpr)).cast("int"))
+    fa = file_aligned_session(spark)
+    docs = fa.read.parquet(src.docs)
     remapped = docs.withColumn(
         "new_range", (F.col("doc_id") / F.lit(dpr)).cast("int"))
     # a range value r carries over iff its membership is unchanged:
     # |old r| == |new r| == |docs where old == new == r|
-    pairs = remapped.select("range_id", "new_range").persist()
-    old_c = {int(r["range_id"]): int(r["c"]) for r in
-             pairs.groupBy("range_id").agg(F.count("*").alias("c"))
-             .collect()}
-    new_c = {int(r["new_range"]): int(r["c"]) for r in
-             pairs.groupBy("new_range").agg(F.count("*").alias("c"))
-             .collect()}
-    same_c = {int(r["range_id"]): int(r["c"]) for r in
-              pairs.filter(F.col("range_id") == F.col("new_range"))
-              .groupBy("range_id").agg(F.count("*").alias("c"))
-              .collect()}
-    pairs.unpersist()
+    old_c: dict[int, int] = {}
+    new_c: dict[int, int] = {}
+    same_c: dict[int, int] = {}
+    for old, new, c in (remapped.groupBy("range_id", "new_range").count()
+                        .collect()):
+        old_c[old] = old_c.get(old, 0) + c
+        new_c[new] = new_c.get(new, 0) + c
+        if old == new:
+            same_c[old] = c
     affected = {r for r in set(old_c) | set(new_c)
                 if not (old_c.get(r, 0) == new_c.get(r, 0)
                         == same_c.get(r, 0))}
@@ -214,7 +158,8 @@ def force_merge(spark: SparkSession, index_dir: str, out_dir: str,
 
     survivors = (remapped.drop("range_id")
                  .withColumnRenamed("new_range", "range_id"))
-    _snapshot_space(spark, src, dst, survivors, affected,
+    _snapshot_space(spark, src, dst, _range_aligned(survivors, affected),
+                    affected,
                     num_ranges=n_ranges, docs_per_range=dpr)
 
     from .fields import field_root, list_field_roots
@@ -222,12 +167,25 @@ def force_merge(spark: SparkSession, index_dir: str, out_dir: str,
     for fname in list_field_roots(spark, index_dir):
         fsrc = IndexPaths(field_root(index_dir, fname))
         fdst = IndexPaths(field_root(out_dir, fname))
-        f_docs = spark.read.parquet(fsrc.docs)
-        f_surv = f_docs.withColumn(
-            "range_id", (F.col("doc_id") / F.lit(dpr)).cast("int"))
+        f_docs = fa.read.parquet(fsrc.docs)
+        f_surv = _range_aligned(f_docs.withColumn(
+            "range_id", (F.col("doc_id") / F.lit(dpr)).cast("int")),
+            affected)
         _snapshot_space(spark, fsrc, fdst, f_surv, affected,
                         num_ranges=n_ranges, docs_per_range=dpr)
     return dst
+
+
+def _range_aligned(df: DataFrame, affected: set[int]) -> DataFrame:
+    """Re-ranged docs in partitions that each hold whole ranges: an
+    unaffected range keeps its old membership, so its docs still sit in
+    one source file (one partition, given a file-aligned read); only
+    the affected ranges' docs are shuffled onto their new range_id."""
+    if not affected:
+        return df
+    moved = F.col("range_id").isin(*sorted(affected))
+    return df.filter(~moved).unionByName(
+        df.filter(moved).repartitionByRange(len(affected), "range_id"))
 
 
 def reingest(spark: SparkSession, source_docs: DataFrame, out_dir: str,

@@ -41,7 +41,14 @@ from .codec import (
     decode_postings,
     tf_norm,
 )
-from .indexer import IndexPaths, bucket_of
+from .indexer import (
+    IndexPaths,
+    bucket_of,
+    is_local,
+    list_parquet_files,
+    lpt_bins,
+    range_span,
+)
 from .oracle import idf as idf_fn
 
 RESULT_SCHEMA = "query_id int, doc_id long, score double"
@@ -75,19 +82,13 @@ def lookup_dict_rows(spark: SparkSession, dict_path: str,
     read at any dictionary size (Lucene's term-dict seek analogue runs
     on one node too). Non-local paths keep the pushed-down Spark scan.
     """
-    import glob
-    import os
-
-    from .indexer import _is_local_path
-
-    if _is_local_path(dict_path, spark):
-        p = dict_path[7:] if dict_path.startswith("file://") else dict_path
-        files = sorted(glob.glob(os.path.join(p, "*.parquet")))
+    if is_local(spark, dict_path):
+        fs, files = list_parquet_files(spark, dict_path)
         if files:
             import pyarrow.parquet as pq
 
-            tbl = pq.read_table(files, filters=[("term", "in",
-                                                 list(terms))])
+            tbl = pq.read_table([f.path for f in files], filesystem=fs,
+                                filters=[("term", "in", list(terms))])
             return tbl.to_pylist()
     return _filter_in(spark.read.parquet(dict_path), "term",
                       list(terms)).collect()
@@ -99,7 +100,7 @@ _ALIGN_CACHE: dict[tuple, bool] = {}
 def _ranges_file_aligned(files: list[str]) -> bool:
     """True iff every doc range's postings live WHOLLY in one file —
     the property that lets a per-file task score its ranges completely.
-    Both builders write range-aligned files, but an external rewrite
+    The postings writer writes range-aligned files, but an external rewrite
     (a crash-simulation overwrite, a third-party compaction) can
     scatter a range across files, and a kernel that sees only part of
     a range would emit wrong partial scores. Checked from parquet
@@ -112,31 +113,16 @@ def _ranges_file_aligned(files: list[str]) -> bool:
     hit = _ALIGN_CACHE.get(key)
     if hit is not None:
         return hit
-    import pyarrow.parquet as pq
+    import pyarrow.fs as pafs
 
-    spans = []
-    ok = True
-    for f in files:
-        try:
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.to_arrow_schema().names.index("range_id")
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError("no stats")
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if lo is None:
-                continue  # empty file
-            spans.append((lo, hi))
-        except Exception:
-            ok = False
-            break
-    if ok:
-        spans.sort()
+    fs = pafs.LocalFileSystem()
+    try:
+        # a file without stats spans every range: never disjoint
+        spans = sorted(s for s in (range_span(fs, f) for f in files) if s)
         ok = all(a_hi < b_lo for (_a, a_hi), (b_lo, _b)
                  in zip(spans, spans[1:]))
+    except Exception:  # unreadable footer or no range_id column
+        ok = False
     if len(_ALIGN_CACHE) > 64:
         _ALIGN_CACHE.clear()
     _ALIGN_CACHE[key] = ok
@@ -154,8 +140,7 @@ def _python_scan_per_range(spark: SparkSession, paths: IndexPaths,
     each whole range inside it — the postings bytes never cross the
     JVM↔Python Arrow socket and the ``groupBy(range_id)`` EXCHANGE
     disappears (every range's rows live in exactly one file by the
-    build's range-alignment invariant, for both the JVM and the pyio
-    writer).
+    build's range-alignment invariant).
 
     Why (BENCH.md §6 round-5 diagnosis): the kernel scales 1→4 cores
     like the Spark-free pool control (~0.86) while the JVM→Arrow
@@ -166,20 +151,16 @@ def _python_scan_per_range(spark: SparkSession, paths: IndexPaths,
     column (dead weight for pure BM25 — the JVM path shipped it).
 
     Returns None when the layout doesn't allow it (non-local postings,
-    or the legacy ``bucket=N/`` partitioned dirs whose files lack the
-    bucket column) — callers fall back to the JVM scan. Disable
-    globally with SPARK_GRAFT_PYSCAN=0.
+    or files whose ranges are not range-aligned) — callers fall back to
+    the JVM scan. Disable globally with SPARK_GRAFT_PYSCAN=0.
     """
-    import glob
     import os
 
     if os.environ.get("SPARK_GRAFT_PYSCAN", "1") == "0":
         return None
-    from .indexer import _is_local_path
-
-    if not _is_local_path(paths.postings, spark):
+    if not is_local(spark, paths.postings):
         return None
-    files = sorted(glob.glob(os.path.join(paths.postings, "*.parquet")))
+    files = [f.path for f in list_parquet_files(spark, paths.postings)[1]]
     if not files or not _ranges_file_aligned(files):
         return None
     bucket_list = sorted(int(b) for b in buckets)
@@ -226,13 +207,7 @@ def _python_scan_per_range(spark: SparkSession, paths: IndexPaths,
 
     slots = max(1, spark.sparkContext.defaultParallelism)
     n_bins = min(len(files), max(8, 2 * slots))
-    bins: list[list[str]] = [[] for _ in range(n_bins)]
-    loads = [0] * n_bins
-    for f in sorted(files, key=_os.path.getsize, reverse=True):
-        i = loads.index(min(loads))
-        bins[i].append(f)
-        loads[i] += _os.path.getsize(f)
-    bins.sort(key=lambda b: -sum(_os.path.getsize(f) for f in b))
+    bins = lpt_bins([(f, _os.path.getsize(f)) for f in files], n_bins)
     return (spark.range(0, n_bins, 1, numPartitions=n_bins)
             .withColumnRenamed("id", "bin")
             .mapInPandas(task, schema=RESULT_SCHEMA))
@@ -613,17 +588,8 @@ def _allowed_docs(spark: SparkSession, paths: IndexPaths,
     them to ANY search, match and match_phrase alike). Grouped by range_id
     for the cogroup with the postings scan: each doc-range kernel sees only
     its own allowed ids, never a global id broadcast."""
-    docs_scan = spark.read.parquet(paths.docs)
-    if "range_id" in docs_scan.columns:
-        # prepare-assigned ranges ride on the docs table
-        return docs_scan.filter(doc_filter).select("doc_id", "range_id")
-    # legacy fixed-width ranges
-    st_row = spark.read.parquet(paths.stats).collect()[0]
-    dpr = int(st_row["docs_per_range"])
-    return (docs_scan.filter(doc_filter)
-            .select("doc_id",
-                    (F.col("doc_id") / F.lit(dpr)).cast("int")
-                    .alias("range_id")))
+    return (spark.read.parquet(paths.docs).filter(doc_filter)
+            .select("doc_id", "range_id"))
 
 
 def resolve_msm(spec: int | str, n_terms: int) -> int:

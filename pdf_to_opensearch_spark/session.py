@@ -18,6 +18,9 @@ def _daemon_module() -> str | None:
     if the JVM has not launched yet. When a SparkContext already exists
     the conf could not apply anyway (PythonWorkerFactory reads the
     context-creation conf), so return None and keep the stock daemon.
+    A stopped earlier context leaves the py4j gateway and its JVM with a
+    frozen environment: the daemon is then enabled only if that JVM was
+    launched with the package root on its PYTHONPATH.
     """
     from pyspark import SparkContext
 
@@ -26,6 +29,11 @@ def _daemon_module() -> str | None:
     if SparkContext._active_spark_context is not None:
         return None
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if SparkContext._gateway is not None:
+        jvm_pp = (SparkContext._gateway.jvm.java.lang.System
+                  .getenv("PYTHONPATH") or "")
+        if root not in jvm_pp.split(os.pathsep):
+            return None
     pp = os.environ.get("PYTHONPATH", "")
     if root not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = root + (os.pathsep + pp if pp else "")

@@ -39,37 +39,17 @@ from pyspark.sql import functions as F
 from . import ANALYZER_VERSION
 from .analyzer import token_count_udf
 from .indexer import (
-    POSTINGS_SCHEMA,
     IndexPaths,
-    _spimi_batches,
     assign_doc_ids,
-    term_bucket_col,
+    file_aligned_session,
+    list_parquet_files,
+    read_small_table,
+    refresh_derived_full,
+    require_current_layout,
+    write_postings,
+    write_small_table,
+    write_stats,
 )
-
-
-def _refresh_derived_full(spark: SparkSession, paths: IndexPaths,
-                          docs_per_range: int, num_ranges: int,
-                          n_buckets: int) -> None:
-    """Full recompute after a rollback rewrite (rare crash-recovery path):
-    docs changed, so N/avgdl/doc_stats/docs_meta are re-derived from the
-    surviving docs, everything else from the surviving postings."""
-    import pandas as pd
-
-    from .indexer import refresh_derived_tables
-
-    g = (spark.read.parquet(paths.docs)
-         .agg(F.count("*").alias("N"), F.sum("dl").alias("s")).collect()[0])
-    N = int(g["N"])
-    sum_dl = int(g["s"] or 0)
-    avgdl = (sum_dl / N) if N else 0.0
-    from .indexer import write_small_table
-
-    meta = pd.DataFrame([{"N": N, "sum_dl": sum_dl, "avgdl": avgdl}])
-    write_small_table(spark, meta, paths.docs_meta)
-    refresh_derived_tables(spark, paths, N=N, avgdl=avgdl,
-                           docs_per_range=docs_per_range,
-                           num_ranges=num_ranges, n_buckets=n_buckets,
-                           refresh_doc_stats=True)
 
 
 def _batch_log_path(paths: IndexPaths) -> str:
@@ -104,20 +84,7 @@ def _log_batch(spark: SparkSession, paths: IndexPaths, batch_id: int,
         .write.mode("append").parquet(_batch_log_path(paths))
 
 
-def _bucket_partitioned(postings_path: str) -> bool:
-    """True when the postings dir uses the legacy ``bucket=N/`` directory
-    layout (pre-flat-write indexes). Appending root-level flat files to
-    such a dir would be SILENTLY IGNORED by Spark partition discovery —
-    every write path must check this and keep the layout consistent."""
-    import glob
-    import os
-
-    return any(os.path.isdir(p)
-               for p in glob.glob(os.path.join(postings_path, "bucket=*")))
-
-
-def _swap_rewrite(spark: SparkSession, path: str, df: DataFrame,
-                  partition_by: str | None = None) -> None:
+def _swap_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
     """Rewrite a local parquet dir from a filtered read (staging + rename).
 
     On a production object store this is an Iceberg snapshot commit; the
@@ -128,10 +95,7 @@ def _swap_rewrite(spark: SparkSession, path: str, df: DataFrame,
 
     staging = path + ".staging"
     shutil.rmtree(staging, ignore_errors=True)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(staging)
+    df.write.mode("overwrite").parquet(staging)
     shutil.rmtree(path)
     os.rename(staging, path)
 
@@ -157,20 +121,21 @@ def rollback_incomplete(spark: SparkSession, index_dir: str) -> list[int]:
     # apply doc_id//dpr arithmetic to assigned-range ids it has no
     # relation to, orphaning or dropping committed ranges
     min_range = min((r if r >= 0 else b // dpr) for _i, b, r in pending)
+    # file-aligned reads: every kept range stays whole in one file
+    fa = file_aligned_session(spark)
     _swap_rewrite(spark, paths.docs,
-                  spark.read.parquet(paths.docs)
+                  fa.read.parquet(paths.docs)
                   .filter(F.col("doc_id") < min_base))
     _swap_rewrite(spark, paths.postings,
-                  spark.read.parquet(paths.postings)
-                  .filter(F.col("range_id") < min_range),
-                  partition_by="bucket"
-                  if _bucket_partitioned(paths.postings) else None)
+                  fa.read.parquet(paths.postings)
+                  .filter(F.col("range_id") < min_range))
     # mark as committed-with-rollback so they are not retried against
     for bid, base, brange in pending:
         _log_batch(spark, paths, bid, base, brange, "rolled_back")
         _log_batch(spark, paths, bid, base, brange, "committed")
-    _refresh_derived_full(spark, paths, dpr, int(st["num_ranges"]),
-                          int(st["n_buckets"]))
+    refresh_derived_full(spark, paths, docs_per_range=dpr,
+                         num_ranges=int(st["num_ranges"]),
+                         n_buckets=int(st["n_buckets"]))
     return [bid for bid, _b, _r in pending]
 
 
@@ -183,32 +148,30 @@ def append_batch(spark: SparkSession, new_docs: DataFrame, index_dir: str,
     committed is skipped, and a crashed batch is rolled back (its doc_ids
     AND range_ids are strictly above every committed one — appended docs
     get fresh ranges, so committed postings files are never touched).
+    The new ranges' postings come from the same writer as a full build
+    (:func:`~.indexer.write_postings`). Legacy layouts are refused.
     """
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     paths = IndexPaths(index_dir)
+    require_current_layout(spark, paths)
     if batch_id is not None:
         committed, pending = _read_batch_log(spark, paths)
         if batch_id in committed:
             return 0
         if pending:
             rollback_incomplete(spark, index_dir)
-    st = spark.read.parquet(paths.stats).collect()[0]
-    docs_per_range = int(st["docs_per_range"])
-    n_buckets = int(st["n_buckets"])
-    docs_now = spark.read.parquet(paths.docs)
-    if "range_id" in docs_now.columns:
-        cur = docs_now.agg(F.max("doc_id").alias("m"),
-                           F.max("range_id").alias("r")).collect()[0]
-        base = int(cur["m"]) + 1 if cur["m"] is not None else 0
-        base_range = int(cur["r"]) + 1 if cur["r"] is not None else 0
-    else:  # legacy fixed-width ranges: align base to a range boundary
-        cur = docs_now.agg(F.max("doc_id").alias("m")).collect()[0]
-        nxt = int(cur["m"]) + 1 if cur["m"] is not None else 0
-        base = -(-nxt // docs_per_range) * docs_per_range
-        base_range = base // docs_per_range
+    st = read_small_table(spark, paths.stats).iloc[0]
+    cur = (spark.read.parquet(paths.docs)
+           .agg(F.max("doc_id").alias("m"), F.max("range_id").alias("r"))
+           .collect()[0])
+    base = int(cur["m"]) + 1 if cur["m"] is not None else 0
+    base_range = int(cur["r"]) + 1 if cur["r"] is not None else 0
 
+    n_parts = max(new_docs.rdd.getNumPartitions(), 1)
     ided = assign_doc_ids(new_docs.select("url", "text", "lang"),
-                          partitions=max(new_docs.rdd.getNumPartitions(), 1),
-                          with_range_id=True)
+                          partitions=n_parts, with_range_id=True)
     try:
         with_ids = (ided
                     .withColumn("doc_id", F.col("doc_id") + F.lit(base))
@@ -216,6 +179,8 @@ def append_batch(spark: SparkSession, new_docs: DataFrame, index_dir: str,
                                 (F.col("range_id") + F.lit(base_range))
                                 .cast("int"))
                     .withColumn("dl", token_count_udf(F.col("text"))))
+        # count() prunes the dl UDF: the text crosses to Python once, in
+        # the write below
         n_new = with_ids.count()
         if n_new == 0:
             return 0
@@ -224,29 +189,17 @@ def append_batch(spark: SparkSession, new_docs: DataFrame, index_dir: str,
         with_ids.write.mode("append").parquet(paths.docs)
     finally:
         ided._persisted_input.unpersist()
-    # batch-local Σdl for the incremental N/avgdl update (O(batch) agg
-    # over the just-written rows, pruned by the doc_id >= base predicate)
-    dl_row = (spark.read.parquet(paths.docs)
-              .filter(F.col("doc_id") >= base)
-              .agg(F.sum("dl").alias("s")).collect()[0])
-    batch_dl_sum = int(dl_row["s"] or 0)
-
-    indexable = (spark.read.parquet(paths.docs)
-                 .filter(F.col("doc_id") >= base))
-    n_ranges = max(1, min(int(indexable.rdd.getNumPartitions()),
-                          -(-n_new // max(docs_per_range, 1))))
-    spimi_in = (indexable.select("doc_id", "text", "range_id")
-                .repartitionByRange(n_ranges, "range_id"))
-    postings = spimi_in.mapInPandas(
-        _spimi_batches(), schema=POSTINGS_SCHEMA)
-    postings = postings.withColumn(
-        "bucket", term_bucket_col(F.col("term"), n_buckets))
-    w = postings.sortWithinPartitions("bucket", "term").write.mode("append")
-    if _bucket_partitioned(paths.postings):
-        # legacy bucket=N/ directory layout: a root-level flat append would
-        # be invisible to partition discovery — keep the dir's own layout
-        w = w.partitionBy("bucket")
-    w.parquet(paths.postings)
+    # batch-local Σdl for the incremental N/avgdl update: a driver-side
+    # read of the just-written rows' dl (row groups pruned by the
+    # doc_id >= base predicate on their footer stats — O(batch))
+    fs, files = list_parquet_files(spark, paths.docs)
+    batch_dl_sum = int(pc.sum(pq.read_table(
+        [f.path for f in files], filesystem=fs, columns=["dl"],
+        filters=[("doc_id", ">=", base)]).column("dl")).as_py() or 0)
+    # one assign partition = one new range = one docs file
+    write_postings(spark, paths.docs, paths.postings, int(st["n_buckets"]),
+                   mode="append",
+                   ranges=set(range(base_range, base_range + n_parts)))
 
     _incremental_refresh(spark, paths, st, base, base_range, n_new,
                          batch_dl_sum)
@@ -288,22 +241,15 @@ def _incremental_refresh(spark: SparkSession, paths: IndexPaths, st,
     N_old, avgdl_old = int(st["N"]), float(st["avgdl"])
     N_new = N_old + n_new
     avgdl_new = (N_old * avgdl_old + batch_dl_sum) / N_new if N_new else 0.0
-    from .indexer import write_small_table
-
     meta = pd.DataFrame([{"N": N_new,
                           "sum_dl": int(round(N_new * avgdl_new)),
                           "avgdl": avgdl_new}])
     write_small_table(spark, meta, paths.docs_meta)
-    stats_pdf = pd.DataFrame([{
-        "N": N_new, "avgdl": avgdl_new,
-        "avgdl_build": float(st["avgdl_build"]),
-        "docs_per_range": int(st["docs_per_range"]),
-        "num_ranges": int(st["num_ranges"]),
-        "n_buckets": int(st["n_buckets"]),
-        "analyzer_version": ANALYZER_VERSION,
-        "k1": float(st["k1"]), "b": float(st["b"]),
-    }])
-    write_small_table(spark, stats_pdf, paths.stats)
+    write_stats(spark, paths, N=N_new, avgdl=avgdl_new,
+                avgdl_build=float(st["avgdl_build"]),
+                docs_per_range=int(st["docs_per_range"]),
+                num_ranges=int(st["num_ranges"]),
+                n_buckets=int(st["n_buckets"]))
     (new_posts.groupBy("range_id")
      .agg(F.sum("n").alias("n_postings"),
           F.countDistinct("term").alias("n_terms"),

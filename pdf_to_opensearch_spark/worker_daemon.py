@@ -31,8 +31,11 @@ try:  # pragma: no cover - trivial import wiring
     # once these chains are resident and are left to first use.
     import pdf_to_opensearch_spark.indexer  # noqa: F401  (analyzer, codec)
     import pdf_to_opensearch_spark.query  # noqa: F401
-except Exception:  # noqa: BLE001 - preload is best-effort by design
-    pass
+except Exception as e:  # noqa: BLE001 - preload is best-effort by design
+    # stderr only: stdout carries the daemon protocol
+    import sys
+
+    sys.stderr.write(f"worker_daemon preload skipped: {e!r}\n")
 
 from pyspark.daemon import manager
 

@@ -146,36 +146,36 @@ def test_streaming_end_to_end(spark, base_index, tmp_path):
 
 
 def test_append_to_legacy_bucket_partitioned_index(spark, base_index):
-    # legacy indexes store postings under bucket=N/ subdirs; a flat append
-    # would be silently invisible to partition discovery — the writer must
-    # detect the layout and keep it (appended docs stay searchable)
+    # legacy indexes store postings under bucket=N/ subdirs; no writer
+    # produces that layout any more, so an append must refuse it (naming
+    # the layout and the reindex way out) before it writes anything
+    import os
     import shutil
 
-    from pdf_to_opensearch_spark.indexer import IndexPaths
-    from pdf_to_opensearch_spark.streaming import _bucket_partitioned
+    from pdf_to_opensearch_spark.indexer import IndexPaths, LegacyLayoutError
 
-    root, pdf0 = base_index
+    root, _pdf0 = base_index
     paths = IndexPaths(root)
-    # migrate the flat postings dir to the legacy bucket-partitioned layout
     legacy = paths.postings + ".legacy"
     (spark.read.parquet(paths.postings)
      .write.partitionBy("bucket").parquet(legacy))
     shutil.rmtree(paths.postings)
     shutil.move(legacy, paths.postings)
-    assert _bucket_partitioned(paths.postings)
 
-    pdf1, sdf1 = _batch_docs(spark, 30, seed=44)
-    assert append_batch(spark, sdf1, root, batch_id=2) == len(pdf1)
-    # the appended postings are VISIBLE: per-range doc coverage is complete
-    posts = spark.read.parquet(paths.postings)
-    n0 = len(pdf0)
-    n_docs = spark.read.parquet(f"{root}/docs").count()
-    assert n_docs == n0 + len(pdf1)
-    appended_terms = posts.filter(posts["first_doc_id"] >= n0).count()
-    assert appended_terms > 0
-    oracle = _oracle_for([pdf0, pdf1],
-                         [np.arange(n0), np.arange(n0, n0 + len(pdf1))])
-    _check(spark, root, oracle)
+    def tree():
+        out = {}
+        for d, _dirs, files in os.walk(root):
+            for f in files:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.join(d, f)] = fh.read()
+        return out
+
+    before = tree()
+    _pdf1, sdf1 = _batch_docs(spark, 30, seed=44)
+    with pytest.raises(LegacyLayoutError,
+                       match="bucket=N/.*maintenance.reindex"):
+        append_batch(spark, sdf1, root, batch_id=2)
+    assert tree() == before
 
 
 def test_append_doc_stats_consistency(spark, tmp_path):

@@ -2,10 +2,10 @@
 given core count.
 
 Replicates bench.index_once's exact environment (same warm-ups, fresh
-JVM) on the bench scaling corpus, with SPARK_GRAFT_TIMING=1 phase ticks,
-plus (a) a warm EMPTY spark.range->mapInPandas job (the pure
-submit+turnaround floor) and (b) a worker-side first-unpickle import
-probe. Diagnostic only — not part of the driver contract.
+session) on the bench scaling corpus and prints the build's phase
+timings (``paths.timings``), plus (a) a warm EMPTY
+spark.range->mapInPandas job (the pure submit+turnaround floor) and (b)
+a worker-side first-unpickle import probe. Diagnostic only — not part of the driver contract.
 
 Usage: python tools/probe_build_const.py <cores> [reps]
 """
@@ -16,7 +16,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ["SPARK_GRAFT_TIMING"] = "1"
 
 
 def main() -> None:
