@@ -29,22 +29,24 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .indexer import IndexPaths
-from .query import search
+from .indexer import IndexPaths, is_local, list_parquet_files
+from .query import (
+    as_frame,
+    load_stats,
+    local_frame,
+    merge_top_k,
+    search_top_k,
+)
 
 RRF_K0 = 60
 
 
-def knn_docs_topk(spark: SparkSession, index_dir: str,
-                  query_vecs: list[tuple[int, list[float]]], k: int = 10,
-                  vec_col: str = "embedding",
-                  doc_filter: str | None = None) -> DataFrame:
-    """Exact cosine top-k per query vector over the index's docs table.
-
-    Returns (query_id, rank, doc_id, sim); rank by sim desc, doc_id asc.
-    ``doc_filter``: optional SQL predicate over docs columns — restricts
-    the candidate vectors (filter context), pushed into the docs scan.
-    """
+def _knn_kernel(query_vecs: list[tuple[int, list[float]]], k: int,
+                vec_col: str):
+    """Exact cosine top-k of each query vector over one batch of
+    (doc_id, ``vec_col``) rows: an iterator kernel for ``mapInPandas``,
+    also run in the driver by :func:`search_hybrid` on the whole table.
+    Emits (query_id, doc_id, sim) ordered by sim desc, doc_id asc."""
     from collections.abc import Iterator
 
     qids = np.array([q for q, _v in query_vecs], dtype=np.int64)
@@ -81,6 +83,20 @@ def knn_docs_topk(spark: SparkSession, index_dir: str,
                 "sim": pd.Series(out_s, dtype="float64"),
             })
 
+    return kernel
+
+
+def knn_docs_topk(spark: SparkSession, index_dir: str,
+                  query_vecs: list[tuple[int, list[float]]], k: int = 10,
+                  vec_col: str = "embedding",
+                  doc_filter: str | None = None) -> DataFrame:
+    """Exact cosine top-k per query vector over the index's docs table.
+
+    Returns (query_id, rank, doc_id, sim); rank by sim desc, doc_id asc.
+    ``doc_filter``: optional SQL predicate over docs columns — restricts
+    the candidate vectors (filter context), pushed into the docs scan.
+    """
+    kernel = _knn_kernel(query_vecs, k, vec_col)
     paths = IndexPaths(index_dir)
     docs = (spark.read.parquet(paths.docs)
             .filter(F.col(vec_col).isNotNull()))
@@ -217,6 +233,13 @@ def search_hybrid(spark: SparkSession, index_dir: str,
     386-408 + 873-884); the kNN leg always scans the root docs table
     (embeddings are per-document, not per-field), and a ``doc_filter``
     resolves against the root docs for both legs.
+
+    Both legs run in the driver, with no Spark job, when the lexical leg
+    fits :data:`~.query.DRIVER_POSTINGS_MAX` (see :mod:`.query`) and the
+    kNN leg's N·dim does too (``vector_mode='exact'``, no
+    ``doc_filter``, local docs): the same kNN kernel on the whole
+    (doc_id, embedding) table, then the 4-dp re-rank and the fusion in
+    pandas with Spark's rounding (:func:`spark_round`).
     """
     if vector_mode not in ("exact", "lsh"):
         raise ValueError(f"vector_mode must be exact|lsh, got {vector_mode!r}")
@@ -230,16 +253,97 @@ def search_hybrid(spark: SparkSession, index_dir: str,
         from .fields import field_root
 
         bm_root, bm_froot = field_root(index_dir, field), index_dir
-    bm = search(spark, bm_root, [(q, t) for q, t, _v in queries],
-                k=depth + 5, prune=prune, doc_filter=doc_filter,
-                filter_root=bm_froot)
+    vecs = [(q, v) for q, _t, v in queries]
+    bm = search_top_k(spark, bm_root, [(q, t) for q, t, _v in queries],
+                      k=depth + 5, prune=prune, doc_filter=doc_filter,
+                      filter_root=bm_froot)
+    if (isinstance(bm, pd.DataFrame) and vector_mode == "exact"
+            and doc_filter is None and _knn_fits(spark, index_dir, vecs)):
+        return local_frame(spark, _fuse_local(
+            bm, _knn_local(spark, index_dir, vecs, depth), k, depth, k0),
+            score="rrf")
+    knn_fn = knn_docs_topk if vector_mode == "exact" else knn_docs_topk_lsh
+    knn = knn_fn(spark, index_dir, vecs, k=depth, doc_filter=doc_filter)
+    return _fuse(as_frame(spark, bm), knn, k, depth, k0)
+
+
+def _fuse(bm: DataFrame, knn: DataFrame, k: int, depth: int,
+          k0: int) -> DataFrame:
+    """BM25 top-(depth+5) re-ranked on 4-dp scores and cut at ``depth``,
+    fused with the kNN list by :func:`rrf_fuse`."""
     wb = Window.partitionBy("query_id").orderBy(
         F.round("score", 4).desc(), F.col("doc_id").asc())
     bm = (bm.withColumn("rank", F.row_number().over(wb))
           .filter(F.col("rank") <= depth)
           .select("query_id", "rank", "doc_id"))
-    knn_fn = knn_docs_topk if vector_mode == "exact" else knn_docs_topk_lsh
-    knn = knn_fn(spark, index_dir,
-                 [(q, v) for q, _t, v in queries], k=depth,
-                 doc_filter=doc_filter)
     return rrf_fuse(bm, knn.select("query_id", "rank", "doc_id"), k=k, k0=k0)
+
+
+def _knn_fits(spark: SparkSession, index_dir: str, query_vecs) -> bool:
+    """The kNN leg's driver budget: N docs × dim floats, against the
+    same constant as the postings. It is the conservative side: one
+    16-d query over 4 docs files on a 4-CPU box took 77 ms in the driver
+    against 812 ms distributed at N·dim = 400k, and 217 against 712 ms
+    at 1.6M."""
+    from . import query
+
+    dim = len(query_vecs[0][1]) if query_vecs else 0
+    return (is_local(spark, IndexPaths(index_dir).docs)
+            and load_stats(spark, index_dir).N * dim
+            <= query.DRIVER_POSTINGS_MAX)
+
+
+def _knn_local(spark: SparkSession, index_dir: str, query_vecs,
+               depth: int, vec_col: str = "embedding") -> pd.DataFrame:
+    """:func:`knn_docs_topk` in the driver: (doc_id, ``vec_col``) of every
+    docs file read with pyarrow, the kNN kernel on the whole table."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    kernel = _knn_kernel(query_vecs, depth, vec_col)
+    fs, infos = list_parquet_files(spark, IndexPaths(index_dir).docs)
+    parts = []
+    if infos:
+        tbl = pq.read_table([f.path for f in infos], filesystem=fs,
+                            columns=["doc_id", vec_col])
+        tbl = tbl.filter(pc.is_valid(tbl[vec_col]))
+        parts = list(kernel(iter([tbl.to_pandas()])))
+    return merge_top_k(parts, depth, score="sim")
+
+
+def spark_round(x, dp: int) -> np.ndarray:
+    """``F.round(x, dp)`` on doubles, in the driver. Spark rounds HALF_UP
+    on the value's decimal string (``java.math.BigDecimal.valueOf``);
+    Python's ``round`` rounds the binary value half-to-even, so
+    ``round(2.675, 2) == 2.67`` where Spark gives 2.68. ``repr`` gives
+    the shortest round-tripping string, which is Java's
+    ``Double.toString`` up to the rare non-shortest outputs of JDKs
+    before 19."""
+    import math
+    from decimal import ROUND_HALF_UP, Context, Decimal
+
+    ctx = Context(prec=800)
+    q = Decimal(1).scaleb(-dp)
+    return np.array(
+        [float(Decimal(repr(v)).quantize(q, ROUND_HALF_UP, ctx))
+         if math.isfinite(v) else v for v in map(float, x)],
+        dtype=np.float64)
+
+
+def _fuse_local(bm: pd.DataFrame, knn: pd.DataFrame, k: int, depth: int,
+                k0: int) -> pd.DataFrame:
+    """:func:`_fuse` in pandas."""
+    bm = merge_top_k([bm.assign(score=spark_round(bm["score"], 4))[
+        ["query_id", "doc_id", "score"]]], depth)
+
+    def contrib(df):
+        return df[["query_id", "doc_id"]].assign(
+            c=1.0 / (k0 + df["rank"].to_numpy(np.int64)))
+
+    fused = contrib(bm).merge(contrib(knn), how="outer",
+                              on=["query_id", "doc_id"])
+    # one contribution per list, a missing one adds 0.0 — the same
+    # IEEE sum as Spark's two-row F.sum (addition is commutative)
+    rrf = fused["c_x"].fillna(0.0) + fused["c_y"].fillna(0.0)
+    return merge_top_k([fused[["query_id", "doc_id"]].assign(
+        rrf=spark_round(rrf, 6))], k, score="rrf")

@@ -1,29 +1,48 @@
-"""BM25 top-k query engine (SURVEY.md J9, O5, W7, §3.3 query lifecycle).
+"""BM25 / phrase top-k query engine (SURVEY.md J9, O5, W7, §3.3 query
+lifecycle).
 
 Natively re-owns what the reference delegated to OpenSearch/Lucene
 (opensearch_loader.py:873-890): analyze query → term dictionary lookup →
-postings traversal → BM25 scores → per-shard top-k → global merge.
+postings traversal → BM25 scores → per-range top-k → global merge.
 
-Physical plan:
-1. Tokenize queries with the frozen analyzer; look up (df, idf) in the
-   dictionary with a parquet scan *filtered by the query terms* (predicate
-   pushdown; the per-query term set is tiny so this is a pruned point read,
-   the broadcast-join analogue of Lucene's term-dictionary seek).
-2. Scan only postings partitions whose term-bucket can contain a query term
-   (``bucket IN (...)`` partition pruning) further filtered ``term IN (...)``
-   (parquet row-group min/max pruning).
-3. ``applyInPandas`` per doc-range: decode blocks, score **term-at-a-time,
-   fully vectorized** (numpy concat → groupby-sum), per-range top-k.
-   Because every document lives in exactly one range, per-range scores are
-   complete — no cross-range combine of partial scores is needed.
-   Optional block-max pruning drops whole 128-posting blocks whose
-   summed upper bounds cannot reach the running threshold (sound: uses the
-   per-block max stored at build time; differential-tested vs exhaustive).
-4. Global top-k: per-range candidates are ≤ k·n_ranges rows → window
-   ``row_number() over (partition by query order by score desc, doc_id)``
-   ≤ k (TakeOrderedAndProject-scale, not a full sort).
+Plan of one call (:func:`search`, :func:`phrase_search` and the two
+:class:`Searcher` methods share it through :func:`_top_k`):
+
+1. Tokenize the queries with the frozen analyzer and read (term, df) for
+   their terms: a driver-side pyarrow point read of the dictionary with a
+   ``term IN`` filter (row-group min/max pruning, no Spark job); a
+   non-local dictionary keeps a pushed-down Spark scan.
+2. Choose where to score from the size of the input: Σdf over the call's
+   distinct live terms is the number of postings the kernel decodes.
+   Up to :data:`DRIVER_POSTINGS_MAX` postings, with local postings and no
+   ``doc_filter``, the call runs in the driver process and launches no
+   Spark job: one pyarrow read of every postings file, pruned by
+   ``bucket IN`` / ``term IN`` on row-group stats, grouped by
+   ``range_id`` across files, the scoring kernel on each whole range,
+   and the global top-k merged in pandas. The result is a local
+   DataFrame (an Arrow-backed LocalRelation). Like Lucene answering a
+   small query on the node that holds the shard, this skips ~0.6-1 s of
+   job launch, planning and task turnaround that a 2k-posting kernel
+   input cannot amortize.
+3. Otherwise the distributed plan: one Spark task per LPT bin of postings
+   files reads them with pyarrow and scores each whole range inside the
+   task (:func:`_python_scan_per_range`); when the files are not
+   range-aligned, or the postings are not local, a JVM parquet scan with
+   the same pushed filters feeds ``groupBy(range_id).applyInPandas``.
+   A ``doc_filter`` cogroups that scan with the allowed docs per range.
+   The global top-k is a ``row_number()`` window over the ≤ k·ranges
+   per-range candidates.
+
+Scoring runs **term-at-a-time, fully vectorized** (numpy concat →
+segmented sum) per doc range. Every document lives in exactly one range,
+so per-range scores are complete and need no cross-range combine.
+Optional block-max pruning drops whole 128-posting blocks whose summed
+upper bounds cannot reach the running threshold (sound: it uses the
+per-block max stored at build time; differential-tested vs exhaustive).
 
 Rank identity: ties broken by ascending doc_id everywhere, scores f64.
+Both branches run the same kernel closures on the same whole ranges, so
+they return the same rows.
 """
 
 from __future__ import annotations
@@ -45,6 +64,7 @@ from .indexer import (
     IndexPaths,
     bucket_of,
     is_local,
+    list_dir,
     list_parquet_files,
     lpt_bins,
     range_span,
@@ -52,6 +72,25 @@ from .indexer import (
 from .oracle import idf as idf_fn
 
 RESULT_SCHEMA = "query_id int, doc_id long, score double"
+
+# Postings budget of the in-driver read path (:func:`_top_k`): a call
+# whose distinct live terms hold at most this many postings (Σdf) is
+# scored in the driver with no Spark job. Set from the crossover of
+# tools/driver_budget_sweep.py (6,000 synthetic docs, 8 ranges, Zipf 1-3
+# term queries, Searcher batches, local[4] on a 4-CPU box, median of 3):
+#   queries   Σdf    unpruned driver/distributed ms   pruned
+#        1    6.8k         64 /  756
+#       16     75k        109 /  746                 142 /  855 (95k)
+#       64    208k        194 /  736                 245 /  779 (191k)
+#      256    421k        478 /  884                 700 / 1008 (404k)
+#      512    567k        822 /  931                1272 / 1042 (561k)
+#     1024    732k       1405 / 1080                2242 / 1476 (729k)
+#     2048    895k       2211 / 1444
+# The driver wins up to ~400k postings with either kernel; past it the
+# distributed plan's 4-way parallel kernel pays for its ~0.7 s of job
+# launch, planning and task turnaround. The budget also caps what the
+# driver reads into memory (a few bytes per posting, more for phrases).
+DRIVER_POSTINGS_MAX = 400_000
 
 # Above this many terms/keys, a literal IN-list bloats the plan (and its
 # serialized size) — switch to a broadcast semi-join. Below it, keep isin:
@@ -152,12 +191,8 @@ def _python_scan_per_range(spark: SparkSession, paths: IndexPaths,
 
     Returns None when the layout doesn't allow it (non-local postings,
     or files whose ranges are not range-aligned) — callers fall back to
-    the JVM scan. Disable globally with SPARK_GRAFT_PYSCAN=0.
+    the JVM scan.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PYSCAN", "1") == "0":
-        return None
     if not is_local(spark, paths.postings):
         return None
     files = [f.path for f in list_parquet_files(spark, paths.postings)[1]]
@@ -203,14 +238,143 @@ def _python_scan_per_range(spark: SparkSession, paths: IndexPaths,
     # Bin ids ride a spark.range frame (one id per partition, pure JVM —
     # no shuffle, no pickled-RDD evaluation under the Arrow runner); the
     # bins themselves travel in the task closure next to qinfo.
-    import os as _os
+    import os
 
     slots = max(1, spark.sparkContext.defaultParallelism)
     n_bins = min(len(files), max(8, 2 * slots))
-    bins = lpt_bins([(f, _os.path.getsize(f)) for f in files], n_bins)
+    bins = lpt_bins([(f, os.path.getsize(f)) for f in files], n_bins)
     return (spark.range(0, n_bins, 1, numPartitions=n_bins)
             .withColumnRenamed("id", "bin")
             .mapInPandas(task, schema=RESULT_SCHEMA))
+
+
+def merge_top_k(parts: list[pd.DataFrame], k: int,
+                score: str = "score") -> pd.DataFrame:
+    """Global top-k of per-range (or per-partition) candidates in pandas:
+    (query_id, rank, doc_id, ``score``) ranked by (score desc, doc_id
+    asc) — the order of the distributed ``row_number()`` window."""
+    parts = [p for p in parts if len(p)]
+    if not parts:
+        return pd.DataFrame({
+            "query_id": pd.Series([], dtype="int32"),
+            "rank": pd.Series([], dtype="int32"),
+            "doc_id": pd.Series([], dtype="int64"),
+            score: pd.Series([], dtype="float64")})
+    cand = (pd.concat(parts, ignore_index=True)
+            .sort_values(["query_id", score, "doc_id"],
+                         ascending=[True, False, True], ignore_index=True))
+    rank = (cand.groupby("query_id").cumcount() + 1).astype("int32")
+    cand.insert(1, "rank", rank)
+    return cand[rank <= k][["query_id", "rank", "doc_id", score]]
+
+
+def local_frame(spark: SparkSession, pdf: pd.DataFrame,
+                score: str = "score") -> DataFrame:
+    """A (query_id, rank, doc_id, ``score``) result held in the driver as
+    a Spark DataFrame. Built from an Arrow table it is a LocalRelation:
+    collecting it launches no Spark job (a list- or RDD-backed frame
+    launches one, and an empty pandas frame skips the Arrow path)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array(pdf["query_id"], pa.int32()),
+        "rank": pa.array(pdf["rank"], pa.int32()),
+        "doc_id": pa.array(pdf["doc_id"], pa.int64()),
+        score: pa.array(pdf[score], pa.float64())}))
+
+
+def _driver_top_k(spark: SparkSession, paths: IndexPaths, kernel, k: int,
+                  buckets: list[int], terms: list[str],
+                  need_positions: bool) -> pd.DataFrame | None:
+    """The in-driver branch of :func:`_top_k`: every postings file read
+    in one pyarrow call with the same bucket/term row-group pruning as
+    the Spark task, grouped by ``range_id`` ACROSS files (so a range
+    scattered over several files is still scored whole — no alignment
+    check), the kernel on each range, the top-k merged in pandas. No
+    ``pa.set_cpu_count``: that is process-global and belongs to the
+    Spark task, which owns one slot of a shared worker. None for
+    postings in subdirectories (the legacy ``bucket=N/`` layout), which
+    only the JVM scan's partition discovery reads."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    fs, entries = list_dir(spark, paths.postings)
+    if any(e.type == pafs.FileType.Directory for e in entries):
+        return None
+    files = [e.path for e in entries]
+    parts = []
+    if files:
+        names = pq.read_schema(files[0], filesystem=fs).names
+        tbl = pq.read_table(
+            files, filesystem=fs,
+            columns=[c for c in names if need_positions or c != "poss"],
+            filters=[("bucket", "in", buckets), ("term", "in", terms)])
+        if tbl.num_rows:
+            parts = [kernel(grp) for _rid, grp in
+                     tbl.to_pandas().groupby("range_id", sort=False)]
+    return merge_top_k(parts, k)
+
+
+def _postings_scan(spark: SparkSession, paths: IndexPaths,
+                   buckets: list[int], terms: list[str]) -> DataFrame:
+    """JVM postings scan with bucket and term filters pushed down to
+    parquet row-group pruning."""
+    return _filter_in(spark.read.parquet(paths.postings)
+                      .filter(F.col("bucket").isin(buckets)), "term", terms)
+
+
+def _top_k(spark: SparkSession, paths: IndexPaths, make_kernel, k: int,
+           terms: list[str], n_buckets: int, n_postings: int,
+           need_positions: bool = False, doc_filter: str | None = None,
+           filter_root: str | None = None) -> pd.DataFrame | DataFrame:
+    """postings → per-range kernel → global top-k, for every read entry
+    point. ``make_kernel(filtered)`` builds the kernel closure;
+    ``n_postings`` is Σdf over ``terms``. Returns a pandas frame when
+    scored in the driver (see the module docstring for the choice), else
+    the distributed Spark plan; both are (query_id, rank, doc_id,
+    score)."""
+    if k <= 0:
+        # the kernels assume k >= 1 (block-max seeds its threshold from
+        # the k-th contribution); a distributed plan filtered on
+        # ``rank <= 0`` is dropped by Spark's optimizer before any kernel
+        # runs, but the driver branch would call them
+        return merge_top_k([], k)
+    buckets = sorted({bucket_of(t, n_buckets) for t in terms})
+    if (doc_filter is None and n_postings <= DRIVER_POSTINGS_MAX
+            and is_local(spark, paths.postings)):
+        res = _driver_top_k(spark, paths, make_kernel(False), k, buckets,
+                            terms, need_positions)
+        if res is not None:
+            return res
+    if doc_filter is not None:
+        fpaths = IndexPaths(filter_root) if filter_root else paths
+        allowed = _allowed_docs(spark, fpaths, doc_filter)
+        per_range = (_postings_scan(spark, paths, buckets, terms)
+                     .groupBy("range_id")
+                     .cogroup(allowed.groupBy("range_id"))
+                     .applyInPandas(make_kernel(True), schema=RESULT_SCHEMA))
+    else:
+        kern = make_kernel(False)
+        per_range = _python_scan_per_range(spark, paths, kern, buckets,
+                                           terms, need_positions)
+        if per_range is None:
+            per_range = (_postings_scan(spark, paths, buckets, terms)
+                         .groupBy("range_id")
+                         .applyInPandas(kern, schema=RESULT_SCHEMA))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("doc_id").asc())
+    return (per_range
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "doc_id", "score"))
+
+
+def as_frame(spark: SparkSession, res: pd.DataFrame | DataFrame
+             ) -> DataFrame:
+    """A :func:`_top_k` result as a Spark DataFrame."""
+    if isinstance(res, pd.DataFrame):
+        return local_frame(spark, res)
+    return res
 
 
 def _weighted_qinfo(q_terms: dict, idfs: dict) -> dict:
@@ -635,8 +799,42 @@ def search(spark: SparkSession, index_dir: str, queries: list[tuple[int, str]],
     that many DISTINCT query terms (OpenSearch match-query semantics;
     percentage resolves per query by Lucene's positive-percentage floor).
     Forces ``prune=False`` when the resolved floor exceeds 1."""
+    return as_frame(spark, search_top_k(
+        spark, index_dir, queries, k, prune, doc_filter, filter_root, after,
+        minimum_should_match))
+
+
+def search_top_k(spark: SparkSession, index_dir: str,
+                 queries: list[tuple[int, str]], k: int = 10,
+                 prune: bool = True, doc_filter: str | None = None,
+                 filter_root: str | None = None,
+                 after: dict[int, tuple[float, int]] | None = None,
+                 minimum_should_match: int | str | None = None
+                 ) -> pd.DataFrame | DataFrame:
+    """:func:`search` before its result becomes a Spark DataFrame: a
+    pandas frame when scored in the driver, else the Spark plan."""
     paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
+    return _term_top_k(spark, paths, load_stats(spark, index_dir),
+                       lambda ts: _dict_dfs(spark, paths, ts), queries, k,
+                       prune, doc_filter, filter_root, after,
+                       minimum_should_match)
+
+
+def _dict_dfs(spark: SparkSession, paths: IndexPaths,
+              terms: list[str]) -> dict[str, int]:
+    return {r["term"]: int(r["df"])
+            for r in lookup_dict_rows(spark, paths.dictionary, terms)}
+
+
+def _term_top_k(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
+                lookup_dfs, queries: list[tuple[int, str]], k: int,
+                prune: bool, doc_filter: str | None,
+                filter_root: str | None,
+                after: dict[int, tuple[float, int]] | None,
+                minimum_should_match: int | str | None
+                ) -> pd.DataFrame | DataFrame:
+    """BM25 top-k shared by :func:`search` and :meth:`Searcher.search`;
+    ``lookup_dfs(terms) → {term: df}`` is the dictionary read."""
     if after:
         prune = False
         after = {int(q): (float(s), int(d)) for q, (s, d) in after.items()}
@@ -655,46 +853,22 @@ def search(spark: SparkSession, index_dir: str, queries: list[tuple[int, str]],
             prune = False  # block-max masks would undercount match tallies
     terms = sorted({t for toks in q_terms.values() for t in toks})
     if not terms:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
+        return merge_top_k([], k)
     # dictionary point-lookup with pushdown (Lucene term-dict seek analogue)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
+    dfs = lookup_dfs(terms)
     idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
             for t in terms if t in dfs}
     qinfo = _weighted_qinfo(q_terms, idfs)
     if not qinfo:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
-
+        return merge_top_k([], k)
     live_terms = sorted({t for ti in qinfo.values() for t in ti})
-    buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-    postings = _filter_in(                                    # row-group pruning
-        spark.read.parquet(paths.postings)
-        .filter(F.col("bucket").isin(buckets)),               # partition pruning
-        "term", live_terms)
-    if doc_filter is not None:
-        fpaths = IndexPaths(filter_root) if filter_root else paths
-        allowed = _allowed_docs(spark, fpaths, doc_filter)
-        per_range = (postings.groupBy("range_id")
-                     .cogroup(allowed.groupBy("range_id"))
-                     .applyInPandas(
-                         _score_kernel(qinfo, k, stats, prune, filtered=True,
-                                       after_spec=after, msm_spec=msm_spec),
-                         schema=RESULT_SCHEMA))
-    else:
-        kern = _score_kernel(qinfo, k, stats, prune, after_spec=after,
-                             msm_spec=msm_spec)
-        per_range = _python_scan_per_range(spark, paths, kern, buckets,
-                                           live_terms)
-        if per_range is None:
-            per_range = (postings
-                         .groupBy("range_id")
-                         .applyInPandas(kern, schema=RESULT_SCHEMA))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (per_range
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    return _top_k(
+        spark, paths,
+        lambda filtered: _score_kernel(qinfo, k, stats, prune,
+                                       filtered=filtered, after_spec=after,
+                                       msm_spec=msm_spec),
+        k, live_terms, stats.n_buckets, sum(dfs[t] for t in live_terms),
+        doc_filter=doc_filter, filter_root=filter_root)
 
 
 # --------------------------------------------------------- phrase queries
@@ -831,9 +1005,10 @@ def phrase_search(spark: SparkSession, index_dir: str,
     ``slop``: the match_phrase slop option under the ordered-window
     contract documented on :func:`_phrase_kernel` (0 = exact phrase).
 
-    Same physical shape as :func:`search`: dictionary point-lookup →
-    bucket/term-pruned postings scan → per-range vectorized kernel →
-    global top-k window.
+    Same plan as :func:`search` (module docstring): dictionary
+    point-lookup → bucket/term-pruned postings read → per-range
+    vectorized kernel → global top-k, in the driver under the postings
+    budget.
 
     ``doc_filter``: optional SQL predicate over the docs table — the
     reference attaches the same bool/filter context to every query type
@@ -841,14 +1016,23 @@ def phrase_search(spark: SparkSession, index_dir: str,
     filter restricts candidates without changing corpus-global stats.
     """
     paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
+    return as_frame(spark, _phrase_top_k(
+        spark, paths, load_stats(spark, index_dir),
+        lambda ts: _dict_dfs(spark, paths, ts), queries, k, doc_filter,
+        filter_root, slop))
+
+
+def _phrase_top_k(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
+                  lookup_dfs, queries: list[tuple[int, str]], k: int,
+                  doc_filter: str | None, filter_root: str | None,
+                  slop: int) -> pd.DataFrame | DataFrame:
+    """Phrase top-k shared by :func:`phrase_search` and
+    :meth:`Searcher.phrase_search`."""
     q_terms = {qid: tokenize_text(text) for qid, text in queries}
     terms = sorted({t for toks in q_terms.values() for t in toks})
-    empty = "query_id int, rank int, doc_id long, score double"
     if not terms:
-        return spark.createDataFrame([], empty)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
+        return merge_top_k([], k)
+    dfs = lookup_dfs(terms)
     qinfo = {}
     for qid, toks in q_terms.items():
         if toks and all(t in dfs for t in toks):
@@ -856,36 +1040,14 @@ def phrase_search(spark: SparkSession, index_dir: str,
                 idf_fn(stats.N, np.array([dfs[t]]))[0] for t in toks))
             qinfo[int(qid)] = {"terms": toks, "idf": s_idf}
     if not qinfo:
-        return spark.createDataFrame([], empty)
+        return merge_top_k([], k)
     live_terms = sorted({t for i in qinfo.values() for t in i["terms"]})
-    buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-    postings = _filter_in(
-        spark.read.parquet(paths.postings)
-        .filter(F.col("bucket").isin(buckets)),
-        "term", live_terms)
-    if doc_filter is not None:
-        fpaths = IndexPaths(filter_root) if filter_root else paths
-        allowed = _allowed_docs(spark, fpaths, doc_filter)
-        per_range = (postings.groupBy("range_id")
-                     .cogroup(allowed.groupBy("range_id"))
-                     .applyInPandas(
-                         _phrase_kernel(qinfo, k, stats, filtered=True,
+    return _top_k(
+        spark, paths,
+        lambda filtered: _phrase_kernel(qinfo, k, stats, filtered=filtered,
                                         slop=slop),
-                         schema=RESULT_SCHEMA))
-    else:
-        kern = _phrase_kernel(qinfo, k, stats, slop=slop)
-        per_range = _python_scan_per_range(spark, paths, kern, buckets,
-                                           live_terms,
-                                           need_positions=True)
-        if per_range is None:
-            per_range = (postings.groupBy("range_id")
-                         .applyInPandas(kern, schema=RESULT_SCHEMA))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (per_range
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+        k, live_terms, stats.n_buckets, sum(dfs[t] for t in live_terms),
+        need_positions=True, doc_filter=doc_filter, filter_root=filter_root)
 
 
 def explain_scores(spark: SparkSession, index_dir: str,
@@ -990,92 +1152,20 @@ class Searcher:
     def _lookup_dfs(self, terms: list[str]) -> dict[str, int]:
         if self._dfs is not None:
             return {t: self._dfs[t] for t in terms if t in self._dfs}
-        rows = lookup_dict_rows(self.spark, self.paths.dictionary, terms)
-        return {r["term"]: int(r["df"]) for r in rows}
+        return _dict_dfs(self.spark, self.paths, terms)
 
     def search(self, queries: list[tuple[int, str]], k: int = 10,
                prune: bool = True,
                doc_filter: str | None = None) -> DataFrame:
-        stats = self.stats
-        q_terms = {qid: tokenize_text(text) for qid, text in queries}
-        terms = sorted({t for toks in q_terms.values() for t in toks})
-        empty = "query_id int, rank int, doc_id long, score double"
-        if not terms:
-            return self.spark.createDataFrame([], empty)
-        dfs = self._lookup_dfs(terms)
-        idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-                for t in terms if t in dfs}
-        qinfo = _weighted_qinfo(q_terms, idfs)
-        if not qinfo:
-            return self.spark.createDataFrame([], empty)
-        live_terms = sorted({t for ti in qinfo.values() for t in ti})
-        buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-        postings = _filter_in(
-            self.spark.read.parquet(self.paths.postings)
-            .filter(F.col("bucket").isin(buckets)),
-            "term", live_terms)
-        if doc_filter is not None:
-            allowed = _allowed_docs(self.spark, self.paths, doc_filter)
-            per_range = (postings.groupBy("range_id")
-                         .cogroup(allowed.groupBy("range_id"))
-                         .applyInPandas(
-                             _score_kernel(qinfo, k, stats, prune,
-                                           filtered=True),
-                             schema=RESULT_SCHEMA))
-        else:
-            kern = _score_kernel(qinfo, k, stats, prune)
-            per_range = _python_scan_per_range(self.spark, self.paths,
-                                               kern, buckets, live_terms)
-            if per_range is None:
-                per_range = (postings.groupBy("range_id")
-                             .applyInPandas(kern, schema=RESULT_SCHEMA))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc())
-        return (per_range
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id", "score"))
+        return as_frame(self.spark, _term_top_k(
+            self.spark, self.paths, self.stats, self._lookup_dfs, queries,
+            k, prune, doc_filter, None, None, None))
 
     def phrase_search(self, queries: list[tuple[int, str]], k: int = 10,
                       doc_filter: str | None = None) -> DataFrame:
         """match_phrase through the resident-stats handle (same engine as
         module-level :func:`phrase_search`, minus the per-call stats read;
         the dictionary lookup reuses the preloaded df map when present)."""
-        stats = self.stats
-        q_terms = {qid: tokenize_text(text) for qid, text in queries}
-        terms = sorted({t for toks in q_terms.values() for t in toks})
-        empty = "query_id int, rank int, doc_id long, score double"
-        if not terms:
-            return self.spark.createDataFrame([], empty)
-        dfs = self._lookup_dfs(terms)
-        qinfo = {}
-        for qid, toks in q_terms.items():
-            if toks and all(t in dfs for t in toks):
-                s_idf = float(sum(
-                    idf_fn(stats.N, np.array([dfs[t]]))[0] for t in toks))
-                qinfo[int(qid)] = {"terms": toks, "idf": s_idf}
-        if not qinfo:
-            return self.spark.createDataFrame([], empty)
-        live_terms = sorted({t for i in qinfo.values() for t in i["terms"]})
-        buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-        postings = _filter_in(
-            self.spark.read.parquet(self.paths.postings)
-            .filter(F.col("bucket").isin(buckets)),
-            "term", live_terms)
-        if doc_filter is not None:
-            allowed = _allowed_docs(self.spark, self.paths, doc_filter)
-            per_range = (postings.groupBy("range_id")
-                         .cogroup(allowed.groupBy("range_id"))
-                         .applyInPandas(
-                             _phrase_kernel(qinfo, k, stats, filtered=True),
-                             schema=RESULT_SCHEMA))
-        else:
-            per_range = (postings.groupBy("range_id")
-                         .applyInPandas(_phrase_kernel(qinfo, k, stats),
-                                        schema=RESULT_SCHEMA))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc())
-        return (per_range
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id", "score"))
+        return as_frame(self.spark, _phrase_top_k(
+            self.spark, self.paths, self.stats, self._lookup_dfs, queries,
+            k, doc_filter, None, 0))

@@ -69,15 +69,40 @@ def test_docs_scan_prunes_text_for_stats(spark, index_dir):
     assert "html" not in rs
 
 
-def test_search_has_single_aggregation_exchange(spark, index_dir):
-    """The query path should shuffle once for the per-range kernel and once
-    for the tiny global top-k window — no full-corpus wide exchange."""
-    from pdf_to_opensearch_spark.query import search
+def test_search_has_single_aggregation_exchange(spark, index_dir,
+                                                monkeypatch):
+    """The distributed query plan (postings budget forced to 0) should
+    shuffle once for the per-range kernel and once for the tiny global
+    top-k window — no full-corpus wide exchange."""
+    from pdf_to_opensearch_spark import query
 
-    res = search(spark, index_dir, [(1, "spark index")], k=5)
+    monkeypatch.setattr(query, "DRIVER_POSTINGS_MAX", 0)
+    res = query.search(spark, index_dir, [(1, "spark index")], k=5)
     plan = _plan(res)
+    assert "Window" in plan, plan  # the distributed top-k, not a local frame
     n_exchanges = plan.count("Exchange")
     assert n_exchanges <= 4, f"too many exchanges in query plan:\n{plan}"
+
+
+def test_small_search_runs_in_driver_with_zero_jobs(spark, index_dir):
+    """Under the postings budget a search is scored in the driver: its
+    result is a local relation, and collecting it launches no Spark job
+    (counted by the status tracker under a job group of its own)."""
+    import time
+
+    from pdf_to_opensearch_spark.query import search
+
+    sc = spark.sparkContext
+    sc.setJobGroup("plans-driver-search", "plans-driver-search")
+    try:
+        res = search(spark, index_dir, [(1, "spark index")], k=5)
+        rows = res.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(0.3)  # the status store is fed by the listener bus
+    assert rows
+    assert "LocalTableScan" in _plan(res)
+    assert sc.statusTracker().getJobIdsForGroup("plans-driver-search") == []
 
 
 def test_dictionary_agg_is_partial_aggregated(spark, index_dir):

@@ -1,6 +1,8 @@
 """Incremental ingestion: append, exactly-once replay, crash rollback,
 and a Structured Streaming end-to-end file-source run."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -261,9 +263,16 @@ def test_running_user_totals_state_survives_batches(spark, tmp_path):
          .option("checkpointLocation", ckpt).start())
     try:
         q.processAllAvailable()
+        # the second batch lands atomically: one file written elsewhere,
+        # then renamed into src — a multi-file append listed mid-commit
+        # can split over two micro-batches
+        staging = str(tmp_path / "st_staging")
         spark.createDataFrame(
             [(100 + i, i % 2) for i in range(10)], schema) \
-            .write.mode("append").parquet(src)
+            .coalesce(1).write.parquet(staging)
+        part, = [f for f in os.listdir(staging) if f.endswith(".parquet")]
+        os.rename(os.path.join(staging, part),
+                  os.path.join(src, "part-batch2.parquet"))
         q.processAllAvailable()
     finally:
         q.stop()
